@@ -5,6 +5,7 @@ import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** The reference workflow as a library/CLI facade `[RECONSTRUCTED —
   * SURVEY §0: the reference checkout is empty; this mirrors the
@@ -18,6 +19,15 @@ import org.apache.spark.sql.types._
   * histogram-based induction and a single predict projection — no
   * hand-wired job chaining, and the "DistributedCache model shipping"
   * is Spark's broadcast of the fitted model.
+  *
+  * Like the map-only scoring job, scoring runs the forest once per
+  * record: the features are hash-partitioned by id to one partition
+  * per core, predicted there, then shuffled into one partition and
+  * sorted by id within it. A global `orderBy(id)` would run the forest
+  * twice (its range-partition sampling job evaluates the whole child
+  * plan) and `coalesce(1)` would run it on one task (it is narrow, so
+  * the predict joins the single output task). Training caches its
+  * repartitioned input, so MLlib's passes over it read the ingest once.
   *
   * Usage: RandomForestApp <trainPath> <testPath> <outPath>
   *   paths ending .csv are parsed as headerless CSV (features...,label);
@@ -70,22 +80,22 @@ object RandomForestApp {
     }
   }
 
-  /** CSV pair with categorical (string-typed) feature columns
+  /** CSV ingest with categorical (string-typed) feature columns
     * StringIndexer-encoded — the indexers are FIT ON THE TRAINING FILE
     * and applied to both sides, so train/test share one category→index
     * mapping and unseen test categories get the reserved "keep" index.
     * alphabetAsc ordering makes the mapping a function of the category
     * set alone (not of row order/partitioning). Numeric columns pass
     * through unchanged, so pure-numeric CSVs take the exact round-4
-    * path.
+    * path. Returns the training frame and the function that prepares a
+    * test file; the test side is built only when asked for, because
+    * `withStableId` runs its sort's jobs while the frame is built.
     */
-  private def prepareCsv(spark: SparkSession, trainPath: String,
-      testPath: String): (DataFrame, DataFrame) = {
+  private def prepareCsv(spark: SparkSession,
+      trainPath: String): (DataFrame, String => DataFrame) = {
     import org.apache.spark.ml.feature.StringIndexer
-    val trainRaw = spark.read.option("inferSchema", "true").csv(trainPath)
-    val testRaw =
-      if (testPath == trainPath) trainRaw
-      else spark.read.option("inferSchema", "true").csv(testPath)
+    def read(path: String) = spark.read.option("inferSchema", "true").csv(path)
+    val trainRaw = read(trainPath)
     val featCols = trainRaw.columns.dropRight(1).toSeq
     val labelCol = trainRaw.columns.last
     val strCols = featCols
@@ -105,7 +115,7 @@ object RandomForestApp {
         toVecD(array(feats: _*)).as("features"),
         col(labelCol).cast(IntegerType).as("label"))
     }
-    (prep(trainRaw), prep(testRaw))
+    (prep(trainRaw), path => prep(if (path == trainPath) trainRaw else read(path)))
   }
 
   /** Train-only half of the reference's train-job → serialized-model →
@@ -119,17 +129,27 @@ object RandomForestApp {
       numTrees: Int = 50, maxDepth: Int = 8,
       seed: Long = 42L): org.apache.spark.ml.classification.RandomForestClassificationModel = {
     val train0 =
-      if (trainPath.endsWith(".csv")) prepareCsv(spark, trainPath, trainPath)._1
+      if (trainPath.endsWith(".csv")) prepareCsv(spark, trainPath)._1
       else readFeatures(spark, trainPath)
     fitForest(train0, numTrees, maxDepth, seed)
   }
 
+  /** MLlib makes several passes over its input (metadata, split
+    * candidates, the bagged tree input); the input is cached so the
+    * ingest and the repartition shuffle run once, not once per pass.
+    * The 8 hash partitions on `id` stay: bagging is seeded per
+    * partition, so they define the forest.
+    */
   private def fitForest(train0: DataFrame, numTrees: Int, maxDepth: Int,
-      seed: Long): org.apache.spark.ml.classification.RandomForestClassificationModel =
-    new RandomForestClassifier()
+      seed: Long): org.apache.spark.ml.classification.RandomForestClassificationModel = {
+    val input = train0.repartition(8, col("id"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try new RandomForestClassifier()
       .setLabelCol("label").setFeaturesCol("features")
       .setNumTrees(numTrees).setMaxDepth(maxDepth).setSeed(seed)
-      .fit(train0.repartition(8, col("id")))
+      .fit(input)
+    finally input.unpersist()
+  }
 
   /** Persist a trained forest (MLlib's parquet tree layout — the
     * Spark-native form of the reference's serialized-forest handoff
@@ -142,31 +162,44 @@ object RandomForestApp {
   /** Scoring-job half: LOAD the serialized forest and score a test
     * file — no training data needed. Model shipping to executors is
     * Spark's broadcast of the loaded model (the DistributedCache
-    * analogue noted in the class doc).
+    * analogue noted in the class doc). Returns (id, label, prediction)
+    * in one partition, ascending by id. Each row is scored once, on
+    * one task per core: the rows are hash-partitioned by id before the
+    * predict and sorted within the single output partition after it.
+    * An `orderBy(id)` would score every row twice, because its
+    * range-partition sampling job evaluates the whole child plan, and
+    * `coalesce(1)` is narrow, so it would pull the predict into one
+    * task.
     */
   def loadAndScore(spark: SparkSession, modelPath: String,
       testPath: String): DataFrame = {
-    import spark.implicits._
     val model = org.apache.spark.ml.classification
       .RandomForestClassificationModel.load(modelPath)
-    model.transform(readFeatures(spark, testPath))
-      .select($"id", $"label",
-        $"prediction".cast(IntegerType).as("prediction"))
-      .orderBy($"id")
+    score(model, readFeatures(spark, testPath))
   }
 
   /** Train + score; returns (id, label, prediction) for the test set. */
   def trainAndScore(spark: SparkSession, trainPath: String, testPath: String,
       numTrees: Int = 50, maxDepth: Int = 8, seed: Long = 42L): DataFrame = {
-    import spark.implicits._
     val (train0, test) =
-      if (trainPath.endsWith(".csv")) prepareCsv(spark, trainPath, testPath)
-      else (readFeatures(spark, trainPath), readFeatures(spark, testPath))
-    val model = fitForest(train0, numTrees, maxDepth, seed)
-    model.transform(test)
-      .select($"id", $"label",
-        $"prediction".cast(IntegerType).as("prediction"))
-      .orderBy($"id")
+      if (trainPath.endsWith(".csv")) {
+        val (csvTrain, prepTest) = prepareCsv(spark, trainPath)
+        (csvTrain, prepTest(testPath))
+      } else (readFeatures(spark, trainPath), readFeatures(spark, testPath))
+    score(fitForest(train0, numTrees, maxDepth, seed), test)
+  }
+
+  /** The map-only scoring job shared by `loadAndScore` and
+    * `trainAndScore`; its shape is explained on `loadAndScore`.
+    */
+  private def score(
+      model: org.apache.spark.ml.classification.RandomForestClassificationModel,
+      features: DataFrame): DataFrame = {
+    val cores = features.sparkSession.sparkContext.defaultParallelism
+    model.transform(features.repartition(cores, col("id")))
+      .select(col("id"), col("label"),
+        col("prediction").cast(IntegerType).as("prediction"))
+      .repartition(1).sortWithinPartitions("id")
   }
 
   def main(args: Array[String]): Unit = {
@@ -196,7 +229,7 @@ object RandomForestApp {
       case None => trainAndScore(spark, trainPath, testPath).cache()
     }
     try {
-      pred.coalesce(1).write.mode("overwrite").parquet(outPath)
+      pred.write.mode("overwrite").parquet(outPath)
       val n = pred.count()
       val hits = pred.filter(col("prediction") === col("label")).count()
       val acc = if (n == 0) 0.0 else hits.toDouble / n
