@@ -20,79 +20,31 @@ object Graph {
     * noise is ~1e-15 per round and the output is 6dp-rounded at ~1.0
     * scale).
     *
-    * Scale shape: each round is one join of the rank vector with the
-    * degree-annotated edge list plus a partial-aggregated sum per
-    * destination — the Pregel message pattern as plain dataflow. The
-    * rank side is node-sized (the planner broadcasts it while it fits,
-    * and falls back to a keyed shuffle of the SMALL side at scale) and
-    * `localCheckpoint` cuts lineage per round (Round3Ops CC note: a
-    * reliable checkpoint dir serves this role on a real cluster), so
-    * plan depth stays flat however many rounds run. Output is rank ×
-    * |V| (average-normalized, ~1.0), which keeps 6dp rounding
-    * meaningful at any graph size.
+    * The rounds are co-partitioned RDD message rounds ([[GraphRounds]],
+    * which says why not DataFrames): a narrow join and one shuffle per
+    * round, lineage held by shuffle reuse instead of a local checkpoint
+    * per round. Only the final projection, rounding and order run as a
+    * DataFrame. Output is rank × |V| (average-normalized, ~1.0), which
+    * keeps 6dp rounding meaningful at any graph size.
     */
   def graphPagerank(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val pairs = lineitem(spark, sfDir)
       .select($"l_partkey".as("p"), ($"l_suppkey" + 10000000L).as("s"))
       .distinct()
-    // Round 20: the repartition(src) that used to sit here was dead
-    // weight — localCheckpoint returns an ExistingRDD with
-    // UnknownPartitioning (measured), so no downstream join ever
-    // reused the layout and the loop's rank side is broadcast anyway;
-    // all it did was add one full edge exchange AND pin the checkpoint
-    // at 32 partitions, which multiplied every round's partial-agg
-    // fan-out (each map partition emits one partial row per distinct
-    // dst it sees). Dropping it removes the exchange and lets AQE size
-    // the checkpoint's partitions to the data (§2.2), shrinking the
-    // per-round fan-out with it. Output verified identical (the 6dp
-    // protocol absorbs the summation-order change; oracle-proven at
-    // sf0.01 + sf0.1).
-    val edges = pairs.select($"p".as("src"), $"s".as("dst"))
-      .unionAll(pairs.select($"s".as("src"), $"p".as("dst")))
-      .localCheckpoint(true)
-    val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    // Round 19: attach the out-degree to the edge list ONCE — the loop
-    // previously re-ran edges⨝deg every round (5 identical joins of
-    // the full edge list; the board's biggest per-op shuffle at 52 MB/
-    // 5.1M records). deg is a node-sized checkpoint with carried-over
-    // stats, so this build join broadcasts it — no edge exchange.
-    val edgesDeg = edges.join(deg, "src")
-      .select($"src", $"dst", $"deg")
-      .localCheckpoint(true)
-    // edges' blocks are dead weight once edgesDeg is materialized
-    val sc0 = spark.sparkContext
-    ScaleTechniques.checkpointRddId(edges).foreach(id =>
-      sc0.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    val nodes = deg.select($"src".as("node"))
-    val n = nodes.count()
-    var ranks = nodes.select($"node", lit(1.0 / n).as("r"))
-    // edges/deg stay pinned for every round; each round's rank
-    // checkpoint is dropped as soon as the next one is materialized —
-    // without this the blocks of EVERY round (and, across a bench
-    // sweep, every run) stay resident and storage memory grows without
-    // bound (the round-7 driver-bench slowdown). Only the id THIS loop
-    // checkpointed is freed (checkpointRddId), never a registry diff —
-    // a concurrent query's checkpoint blocks must survive us.
-    val sc = spark.sparkContext
-    var prevCkpt: Option[Int] = None
+    val adj = GraphRounds.adjacency(pairs.select($"p", $"s")
+      .unionAll(pairs.select($"s", $"p")))
+    val n = adj.count()
+    var ranks = adj.mapValues(_ => 1.0 / n)
     for (_ <- 1 to 5) {
-      val contrib = edgesDeg
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select($"dst", ($"r" / $"deg").as("c"))
-        .groupBy($"dst").agg(sum($"c").as("contrib"))
-      // every node has in-edges (undirected), so the join is total
-      ranks = contrib
-        .select($"dst".as("node"),
-          (lit(0.15 / n) + lit(0.85) * $"contrib").as("r"))
-        .localCheckpoint(true)
-      val newCkpt = ScaleTechniques.checkpointRddId(ranks)
-      prevCkpt.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkpt = newCkpt
+      // every node has in-edges (undirected), so no rank is dropped
+      ranks = GraphRounds.round(adj, ranks) { (_, nbrs, r) =>
+        val c = r / nbrs.length
+        nbrs.iterator.map((_, c))
+      }(_ + _).mapValues(c => 0.15 / n + 0.85 * c)
     }
-    ranks.select($"node", round($"r" * n, 6).as("rank_scaled"))
+    ranks.toDF("node", "r")
+      .select($"node", round($"r" * n, 6).as("rank_scaled"))
       .orderBy($"node")
   }
 }

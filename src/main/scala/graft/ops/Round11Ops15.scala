@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,86 +13,59 @@ import org.apache.spark.sql.types._
 object Round11Ops15 {
 
   /** HITS hub/authority scores on the directed customer→part purchase
-    * graph, three Pregel-as-joins rounds, integer-exact throughout.
+    * graph, three rounds, integer-exact throughout.
     *
     * Each half-round renormalizes in fixed point: score' =
-    * (score·10⁶) div max(score) — exact integer floor division on
-    * both engines (Spark DIV and DuckDB // both truncate), so the
-    * scores stay order-free and hash-stable while the MAGNITUDE is
-    * bounded at any data scale: inputs ≤ 10⁶ make a half-round's
-    * per-node sum ≤ 10⁶·deg ≤ 10⁶·|E|, and the ×10⁶ rescale keeps the
-    * widest intermediate ≤ 10¹²·|E| — inside DECIMAL(38,0) up to
-    * 10²⁶ edges. (The previous unnormalized form grew like
-    * (degree-sum)⁶ and would overflow 38 digits at ~100× this data —
-    * round-13 verdict.) Each half-round is localCheckpoint'd so round
-    * N+1's plan doesn't re-execute rounds 1..N (the uncut 3-round
-    * join lineage squared the plan, same trap as pseudo-diameter).
-    * Top-20 per role by (score desc, node); scores surface as digit
-    * strings — exact, and hash-stable where DECIMAL columns are not.
+    * (score·10⁶) div max(score) — exact integer floor division (the
+    * oracle's DuckDB // truncates the same way), so the scores stay
+    * order-free and hash-stable while the MAGNITUDE is bounded at any
+    * data scale: inputs ≤ 10⁶ make a half-round's per-node sum
+    * ≤ 10⁶·deg ≤ 10⁶·|E|, and the ×10⁶ rescale keeps the widest
+    * intermediate ≤ 10¹²·|E| — BigInt, so nothing can overflow. (The
+    * unnormalized form grew like (degree-sum)⁶ and would overflow 38
+    * digits at ~100× this data — round-13 verdict.)
+    *
+    * The half-rounds are co-partitioned RDD message rounds
+    * ([[GraphRounds]], which says why not DataFrames): hubs push along
+    * the out-lists, authorities along their transpose, both on one
+    * partitioner, so each half-round is a narrow join, one shuffle and
+    * one driver scalar, its max; lineage is held by shuffle reuse
+    * instead of a local checkpoint per half-round. Top-20 per role by
+    * (score desc, node); scores surface as digit strings — exact, and
+    * hash-stable where DECIMAL columns are not.
     */
   def graphHitsScores(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dec = DecimalType(38, 0)
     val edges = orders(spark, sfDir).select($"o_orderkey", $"o_custkey")
       .join(lineitem(spark, sfDir).select($"l_orderkey", $"l_partkey"),
         $"o_orderkey" === $"l_orderkey")
       .select($"o_custkey".as("c"), $"l_partkey".as("p"))
       .distinct()
-      .localCheckpoint(true)
-    // Round 19 pre-partitioned two edge copies (eC = hash(c), eP =
-    // hash(p)) assuming each half-round join would reuse the layout —
-    // but a local checkpoint is an ExistingRDD with UnknownPartitioning
-    // (measured this round: even repartition(col).localCheckpoint
-    // reports UnknownPartitioning(0)), so the copies ADDED two full
-    // edge shuffles and eliminated none (PlanDump r19: 46.77 →
-    // 57.05 MB, +22% — the r19 verdict's item 2). Round 20: the
-    // half-round joins never needed the edge layout in the first place
-    // — the score frame is the node-sized side and the planner
-    // broadcasts it, streaming the edge checkpoint unshuffled — so the
-    // right fix is to DROP the copies and join both half-rounds
-    // against the single edge checkpoint. Measured min-of-3: 4.96 →
-    // 4.09 s, output identical, two edge exchanges (~11 MB/1.6 M rec)
-    // gone. (A persist()'d partitioned copy was also measured and
-    // lost: columnar encode+decode costs more than the exchanges it
-    // saves — see OPTIMIZATION_r20.md.)
-    val sc = spark.sparkContext
-    // h0 = 1 for every customer; alternate a/h updates, all integer
-    var h = edges.select($"c").distinct()
-      .withColumn("h", lit(1L).cast(dec))
-    var a: DataFrame = null
-    var prevCkpts: Seq[Int] = Nil
-    for (_ <- 1 to 3) {
-      val araw = edges.join(h, Seq("c"))
-        .groupBy($"p").agg(sum($"h").cast(dec).as("araw"))
-        .localCheckpoint(true)
-      a = araw.crossJoin(broadcast(araw.agg(max($"araw").as("amax"))))
-        .select($"p",
-          expr("CAST((araw * 1000000) DIV amax AS DECIMAL(38,0))").as("a"))
-      val hraw = edges.join(a, Seq("p"))
-        .groupBy($"c").agg(sum($"a").cast(dec).as("hraw"))
-        .localCheckpoint(true)
-      h = hraw.crossJoin(broadcast(hraw.agg(max($"hraw").as("hmax"))))
-        .select($"c",
-          expr("CAST((hraw * 1000000) DIV hmax AS DECIMAL(38,0))").as("h"))
-      // drop the PREVIOUS round's half-round blocks once this round's
-      // are materialized (same pattern as graphPagerank: only ids THIS
-      // loop checkpointed are freed, never a registry diff)
-      val newCkpts = Seq(araw, hraw).flatMap(ScaleTechniques.checkpointRddId)
-      prevCkpts.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkpts = newCkpts
+    val toParts = GraphRounds.adjacency(edges)
+    val toCustomers = GraphRounds.transpose(toParts)
+    def halfRound(adj: GraphRounds.Adjacency,
+        score: RDD[(Long, BigInt)]): RDD[(Long, BigInt)] = {
+      val raw = GraphRounds.round(adj, score) { (_, nbrs, s) =>
+        nbrs.iterator.map((_, s))
+      }(_ + _)
+      // fold, not max(), which throws on an empty graph's no rows;
+      // scores are positive, so the 0 seed never wins
+      val max = raw.values.fold(BigInt(0))(_ max _)
+      raw.mapValues(_ * 1000000 / max)
     }
-    // eager loop done; free the edge checkpoint — h/a read only the
-    // final half-round checkpoints
-    ScaleTechniques.checkpointRddId(edges).foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    val hubs = h.orderBy($"h".desc, $"c").limit(20)
-      .select($"c".as("node"), lit("hub").as("hits_role"),
-        $"h".cast(StringType).as("score"))
-    val auths = a.orderBy($"a".desc, $"p").limit(20)
-      .select($"p".as("node"), lit("authority").as("hits_role"),
-        $"a".cast(StringType).as("score"))
-    hubs.unionAll(auths).orderBy($"hits_role", $"node")
+    // h0 = 1 for every customer; alternate a/h updates, all integer
+    var h = toParts.mapValues(_ => BigInt(1))
+    var a: RDD[(Long, BigInt)] = null
+    for (_ <- 1 to 3) {
+      a = halfRound(toParts, h)
+      h = halfRound(toCustomers, a)
+    }
+    def top20(score: RDD[(Long, BigInt)], role: String) =
+      // normalized scores are ≤ 10⁶, so they fit a Long
+      score.mapValues(_.toLong).toDF("node", "s")
+        .orderBy($"s".desc, $"node").limit(20)
+        .select($"node", lit(role).as("hits_role"), $"s".cast(StringType).as("score"))
+    top20(h, "hub").unionAll(top20(a, "authority")).orderBy($"hits_role", $"node")
   }
 
   /** Key-space gap audit: order keys bucketed 4096-wide; each

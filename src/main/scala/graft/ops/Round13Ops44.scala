@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,47 +16,42 @@ object Round13Ops44 {
     * minimum node, restart from the farthest node found, report the
     * second sweep's eccentricity — the standard 2-pass lower bound
     * that large-graph systems use instead of all-pairs distances.
-    * Both sweeps are 4-round Pregel-as-joins frontiers (state
-    * strictly (node, dist), shuffles keyed on node id); all ties
+    * Both sweeps are 4 hops of co-partitioned RDD message rounds
+    * ([[GraphRounds]], which says why not DataFrames): each hop's
+    * distance is the min over the previous distances and their
+    * neighbours' +1, a narrow join and one shuffle, with lineage held
+    * by shuffle reuse instead of a local checkpoint per hop. All ties
     * break on node id so the restart vertex is deterministic.
     */
   def graphPseudoDiameter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = Round10Ops4.thinnedGraph(spark, sfDir)
-    val adj = und.select($"u".as("src"), $"v".as("dst"))
-      .union(und.select($"v".as("src"), $"u".as("dst")))
-    def bfs(seed: DataFrame): DataFrame = {
-      var dist = seed
+    val adj = GraphRounds.adjacency(
+      und.select($"u", $"v").union(und.select($"v", $"u")))
+    def sweep(seed: Long): RDD[(Long, Int)] = {
+      var dist = adj.filter(_._1 == seed).mapValues(_ => 0)
       for (_ <- 1 to 4) {
-        val next = dist.join(adj, $"node" === $"src")
-          .select($"dst".as("node"), ($"dist" + 1).as("dist"))
-        // truncate lineage each round: dist appears twice per round,
-        // so the unchecked plan doubles per hop and the SECOND sweep
-        // (seeded from the first's result) squares it — 18 s on the
-        // bench before this, sub-second after
-        dist = dist.union(next)
-          .groupBy($"node").agg(min($"dist").as("dist"))
-          .localCheckpoint(true)
+        // min over dist ∪ next: a reached node also keeps its own dist
+        dist = GraphRounds.round(adj, dist) { (node, nbrs, d) =>
+          Iterator((node, d)) ++ nbrs.iterator.map((_, d + 1))
+        }(math.min)
       }
       dist
     }
-    val start = und.select($"u".as("node"))
-      .union(und.select($"v".as("node")))
-      .agg(min($"node").as("node")).withColumn("dist", lit(0))
-    val d1 = bfs(start)
-    val far = d1.orderBy($"dist".desc, $"node").limit(1)
-      .select($"node", $"dist".as("ecc1"))
-    val d2 = bfs(far.select($"node", lit(0).as("dist")))
-    val end = d2.orderBy($"dist".desc, $"node").limit(1)
-      .select($"node".as("end_node"), $"dist".as("pseudo_diameter"))
-    val reach = d2.agg(count(lit(1)).as("n_reached"))
-    start.select($"node".as("start_node"))
-      .crossJoin(broadcast(far.select($"node".as("far_node"), $"ecc1")))
-      .crossJoin(broadcast(end))
-      .crossJoin(broadcast(reach))
-      .select($"start_node", $"far_node", $"ecc1".cast(LongType).as("sweep1_ecc"),
-        $"end_node", $"pseudo_diameter".cast(LongType).as("pseudo_diameter"),
-        $"n_reached")
+    def farthest(dist: RDD[(Long, Int)]): (Long, Int) =
+      dist.takeOrdered(1)(Ordering.by { case (node, d) => (-d, node) }).head
+    val row = adj.keys.takeOrdered(1).headOption match {
+      // an empty graph has no minimum node: the null start is carried
+      // through both sweeps as the lone (null, 0) row it reaches
+      case None => (None, None, 0L, None, 0L, 1L)
+      case Some(start) =>
+        val (far, ecc1) = farthest(sweep(start))
+        val d2 = sweep(far)
+        val (end, pd) = farthest(d2)
+        (Some(start), Some(far), ecc1.toLong, Some(end), pd.toLong, d2.count())
+    }
+    Seq(row).toDF("start_node", "far_node", "sweep1_ecc", "end_node",
+      "pseudo_diameter", "n_reached")
   }
 
   /** Rolling 7-day P10/P50/P90 bands over daily revenue: the window's
