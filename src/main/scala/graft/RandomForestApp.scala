@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.SparkContext
+import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.RandomForestClassifier
-import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -14,11 +16,14 @@ import org.apache.spark.storage.StorageLevel
   * an array column), train a forest, score a test file by majority
   * vote, write per-record predictions and report accuracy.
   *
-  * Hadoop-MR mapping: per-mapper tree building + reduce-side forest
-  * assembly + map-only scoring job collapse into MLlib's distributed
-  * histogram-based induction and a single predict projection — no
-  * hand-wired job chaining, and the "DistributedCache model shipping"
-  * is Spark's broadcast of the fitted model.
+  * Hadoop-MR mapping: per-mapper tree building is one Spark job whose
+  * tasks, one per core, each grow whole trees over a broadcast of the
+  * binned training set (`LocalForest`); reduce-side forest assembly is
+  * collecting those trees into an MLlib forest model; the map-only
+  * scoring job is a single predict projection. The "DistributedCache
+  * model shipping" is Spark's broadcast of the forest. A training set
+  * too large for the driver to collect takes MLlib's distributed
+  * histogram-based induction instead (`fitForest`).
   *
   * Like the map-only scoring job, scoring runs the forest once per
   * record: the features are hash-partitioned by id to one partition
@@ -27,7 +32,7 @@ import org.apache.spark.storage.StorageLevel
   * twice (its range-partition sampling job evaluates the whole child
   * plan) and `coalesce(1)` would run it on one task (it is narrow, so
   * the predict joins the single output task). Training caches its
-  * repartitioned input, so MLlib's passes over it read the ingest once.
+  * input while it makes several passes over it.
   *
   * Usage: RandomForestApp <trainPath> <testPath> <outPath>
   *   paths ending .csv are parsed as headerless CSV (features...,label);
@@ -56,18 +61,37 @@ object RandomForestApp {
       schema)
   }
 
+  /** A headerless CSV of feature columns and a last label column. */
+  private def readCsv(spark: SparkSession, path: String): DataFrame = {
+    val raw = spark.read.option("inferSchema", "true").csv(path)
+    require(raw.columns.length >= 2,
+      s"$path has no feature and label columns: the file is empty")
+    raw
+  }
+
+  /** The label as a class index. MLlib's classifiers take only
+    * non-negative integer labels, and a plain cast would truncate 1.5 to
+    * 1, so any other label fails the read.
+    */
+  private def classLabel(c: Column): Column = {
+    val d = c.cast(DoubleType)
+    when(d >= 0 && d === floor(d), d.cast(IntegerType)).otherwise(raise_error(
+      concat(lit("invalid label "), coalesce(c.cast(StringType), lit("null")),
+        lit(": labels must be non-negative integers"))))
+  }
+
   /** Read either format into (id, features vector, label). */
   def readFeatures(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     if (path.endsWith(".csv")) {
-      val raw = spark.read.option("inferSchema", "true").csv(path)
+      val raw = readCsv(spark, path)
       val featCols = raw.columns.dropRight(1)
       val labelCol = raw.columns.last
       withStableId(raw, raw.columns.toSeq).select(
         col("id"),
         toVecD(array(featCols.map(c => col(c).cast(DoubleType)): _*))
           .as("features"),
-        col(labelCol).cast(IntegerType).as("label"))
+        classLabel(col(labelCol)).as("label"))
     } else {
       val raw = spark.read.parquet(path)
       // accept the testdata embeddings schema directly
@@ -76,7 +100,7 @@ object RandomForestApp {
         else ("id", "features", "label")
       raw.select(col(idCol).cast(LongType).as("id"),
         toVecD(col(featCol).cast(ArrayType(DoubleType))).as("features"),
-        col(labelCol).cast(IntegerType).as("label"))
+        classLabel(col(labelCol)).as("label"))
     }
   }
 
@@ -94,8 +118,7 @@ object RandomForestApp {
   private def prepareCsv(spark: SparkSession,
       trainPath: String): (DataFrame, String => DataFrame) = {
     import org.apache.spark.ml.feature.StringIndexer
-    def read(path: String) = spark.read.option("inferSchema", "true").csv(path)
-    val trainRaw = read(trainPath)
+    val trainRaw = readCsv(spark, trainPath)
     val featCols = trainRaw.columns.dropRight(1).toSeq
     val labelCol = trainRaw.columns.last
     val strCols = featCols
@@ -113,9 +136,9 @@ object RandomForestApp {
       // originals alone is already deterministic
       withStableId(enc, featCols :+ labelCol).select(col("id"),
         toVecD(array(feats: _*)).as("features"),
-        col(labelCol).cast(IntegerType).as("label"))
+        classLabel(col(labelCol)).as("label"))
     }
-    (prep(trainRaw), path => prep(if (path == trainPath) trainRaw else read(path)))
+    (prep(trainRaw), path => prep(if (path == trainPath) trainRaw else readCsv(spark, path)))
   }
 
   /** Train-only half of the reference's train-job → serialized-model →
@@ -134,21 +157,56 @@ object RandomForestApp {
     fitForest(train0, numTrees, maxDepth, seed)
   }
 
-  /** MLlib makes several passes over its input (metadata, split
-    * candidates, the bagged tree input); the input is cached so the
-    * ingest and the repartition shuffle run once, not once per pass.
-    * The 8 hash partitions on `id` stay: bagging is seeded per
-    * partition, so they define the forest.
+  /** Grows the forest from `train0`, whose rows are cached for the passes
+    * below. One pass counts them, their feature values and their largest
+    * label. When the driver can hold them (`inMemoryBudget`), they are
+    * collected in id order and the trees grow whole, one task per core
+    * (`LocalForest`). Otherwise MLlib's distributed induction fits the
+    * cached rows in 8 hash partitions on `id`; its bagging is seeded per
+    * partition, so those partitions define that forest, and the counted
+    * class count rides on the label's metadata, which spares MLlib its own
+    * pass for it. The switch point is set by driver memory alone: where
+    * growing whole trees stops beating MLlib's per-level jobs has not been
+    * measured.
     */
-  private def fitForest(train0: DataFrame, numTrees: Int, maxDepth: Int,
-      seed: Long): org.apache.spark.ml.classification.RandomForestClassificationModel = {
-    val input = train0.repartition(8, col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try new RandomForestClassifier()
+  private[graft] def fitForest(train0: DataFrame, numTrees: Int, maxDepth: Int,
+      seed: Long, maxBytes: Long = inMemoryBudget(SparkSession.active.sparkContext))
+      : org.apache.spark.ml.classification.RandomForestClassificationModel = {
+    val mllib = new RandomForestClassifier()
       .setLabelCol("label").setFeaturesCol("features")
       .setNumTrees(numTrees).setMaxDepth(maxDepth).setSeed(seed)
-      .fit(input)
-    finally input.unpersist()
+    val input = train0.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val rows = input.rdd
+      val (n, doubles, maxLabel) = rows.map(r => (1L, r.getAs[Vector](1).size.toLong, r.getInt(2)))
+        .fold((0L, 0L, 0)) { case ((n1, d1, l1), (n2, d2, l2)) => (n1 + n2, d1 + d2, l1 max l2) }
+      // each collected row is 8 B per feature and 92 B of objects (Spark's
+      // SizeEstimator on the collected tuples); the id sort, the labels and
+      // the byte bins with their broadcast copy add about 2 B and 40 B more
+      if (10 * doubles + 132 * n > maxBytes) {
+        val classes = NominalAttribute.defaultAttr.withNumValues(maxLabel + 1).toMetadata()
+        mllib.fit(input.withColumn("label", col("label").as("label", classes))
+          .repartition(8, col("id")))
+      } else LocalForest.fit(train0.sparkSession.sparkContext,
+        rows.map(r => (r.getLong(0), (r.getAs[Vector](1).toArray, r.getInt(2)))).collect()
+          .sortBy(_._1).map(_._2),
+        numTrees, maxDepth, mllib.getMaxBins, seed)
+    } finally input.unpersist()
+  }
+
+  /** The bytes the driver can give the whole-tree path's collected rows:
+    * no more than `spark.driver.maxResultSize`, past which `collect`
+    * fails, and no more than the heap Spark leaves outside its unified
+    * memory pool (`1 − spark.memory.fraction` of the heap past its 300 MB
+    * reserve), since the pool holds the cache and, in local mode, the
+    * tasks' working memory.
+    */
+  private def inMemoryBudget(sc: SparkContext): Long = {
+    val conf = sc.getConf
+    val outsidePool = ((Runtime.getRuntime.maxMemory - (300L << 20)) *
+      (1 - conf.getDouble("spark.memory.fraction", 0.6))).toLong
+    val maxResult = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (maxResult > 0) math.min(outsidePool, maxResult) else outsidePool
   }
 
   /** Persist a trained forest (MLlib's parquet tree layout — the

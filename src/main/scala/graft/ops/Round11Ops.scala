@@ -122,7 +122,7 @@ object Round11Ops {
         .localCheckpoint(true)
       // free the previous round's blocks once this round's are
       // materialized — only ids THIS loop checkpointed, never a
-      // registry diff (graphPagerank's discipline)
+      // registry diff that could evict a concurrent query's blocks
       val newCkpt = ScaleTechniques.checkpointRddId(adj)
       prevCkpt.foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))

@@ -27,18 +27,18 @@ object Round13Ops23 {
       .groupBy($"l_partkey".as("p"), ($"l_suppkey" + 10000000L).as("s"))
       .agg(count(lit(1)).as("w"))
     // Round 20: repartition(src) dropped — dead weight pre-checkpoint
-    // (UnknownPartitioning after localCheckpoint; see graphPagerank's
-    // note): one full weighted-edge exchange gone and the checkpoint's
-    // partition count now follows the data, shrinking each round's
-    // partial-agg fan-out. Integer-exact protocol: output unchanged by
-    // construction.
+    // (a localCheckpoint's output reports UnknownPartitioning, so no
+    // later join could reuse it): one full weighted-edge exchange gone
+    // and the checkpoint's partition count now follows the data,
+    // shrinking each round's partial-agg fan-out. Integer-exact
+    // protocol: output unchanged by construction.
     val edges = pairs.select($"p".as("src"), $"s".as("dst"), $"w")
       .unionAll(pairs.select($"s".as("src"), $"p".as("dst"), $"w"))
       .localCheckpoint(true)
     val ws = edges.groupBy($"src").agg(sum($"w").as("wsum"))
       .localCheckpoint(true)
-    // Round 19: attach wsum to the edge list ONCE (graphPagerank's
-    // hoist) — the loop re-ran edges⨝ws every round, shuffling the
+    // Round 19: attach wsum to the edge list ONCE, before the loop
+    // — the loop re-ran edges⨝ws every round, shuffling the
     // full weighted edge list 3× (47 MB/4.7M records). ws is a node-
     // sized checkpoint with carried stats, so this build join
     // broadcasts it — no edge exchange.

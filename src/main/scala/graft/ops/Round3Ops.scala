@@ -221,9 +221,9 @@ object Round3Ops {
       .localCheckpoint(true)
     // und (and anything the caller pinned) stays resident across
     // rounds; each round's label checkpoint is freed once its
-    // successor is materialized (same bounded-storage pattern as
-    // graphPagerank — unbounded checkpoint retention was the round-7
-    // driver-bench contamination). Freed by the exact id this loop
+    // successor is materialized, so storage stays bounded (unbounded
+    // checkpoint retention was the round-7 driver-bench
+    // contamination). Freed by the exact id this loop
     // checkpointed (checkpointRddId), never a registry snapshot-diff
     // that could evict a concurrent query's blocks.
     val sc = spark.sparkContext
