@@ -343,15 +343,15 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
     def clearLeaks(): Unit = {
       // Drop blocks the finished run leaked into the shared JVM —
-      // localCheckpoint(true) (pagerank / connected-components cut
-      // their iteration lineage this way) pins its materialized RDD
-      // blocks outside the CacheManager, so N passes × 640 queries
-      // accumulate GBs of storage and the driver's round-7 full sweep
-      // ran the dedup family 10-20× slower than in isolation (16.4 s
-      // vs 0.7 s for dedup_minhash_lsh). Queries never share cached
-      // state across entries (disk layouts amortize via /tmp), so
-      // clearing between runs is contamination-control, not a
-      // benchmark cheat.
+      // localCheckpoint(true), which ops use to read one intermediate
+      // table twice (the near-dup shingle table, for one), pins its
+      // materialized RDD blocks outside the CacheManager, so N passes
+      // × 640 queries accumulate GBs of storage, and the round-7
+      // full-board sweep ran the dedup family 10-20× slower than in
+      // isolation (16.4 s vs 0.7 s for dedup_minhash_lsh). Queries
+      // never share cached state across entries (disk layouts
+      // amortize via /tmp), so clearing between runs is
+      // contamination-control, not a benchmark cheat.
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   *   - executed-job/stage counts and total shuffle read/write bytes +
   *     records (collected by a SparkListener around run 2 — the
   *     empirical "how many exchanges actually ran" that a static
-  *     explain cannot show for the iterative ops, whose loops execute
-  *     eagerly via localCheckpoint during plan construction),
+  *     explain cannot show for the ops that execute work eagerly
+  *     while their DataFrame is built: the graph loops' counts and
+  *     lookups, and every localCheckpoint),
   *   - `.explain("formatted")` of the query's final DataFrame.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <suffix> <query...>

@@ -68,43 +68,23 @@ object Round10Ops4 {
   }
 
   /** Single-source BFS distance, bounded to 4 hops, from the graph's
-    * minimum node id. The dataflow is Pregel-as-joins: 4 rounds of
-    * (frontier ⋈ adjacency) followed by a min-distance rollup — every
-    * shuffle keyed on node id, state strictly (node, dist), no path
-    * enumeration (the oracle's recursive CTE enumerates paths, which
-    * is fine for DuckDB at test scale; the Spark side is the
-    * frontier-compressed form a 100 TB graph needs). Distances agree
-    * because min-over-paths ≤ 4 hops = BFS level when levels ≤ 4.
+    * minimum node id: [[GraphRounds.sweep]], the same 4 co-partitioned
+    * message rounds as graph_pseudo_diameter's sweeps — state strictly
+    * (node, dist), no path enumeration (the oracle's recursive CTE
+    * enumerates paths, which is fine for DuckDB at test scale; the
+    * Spark side is the frontier-compressed form a 100 TB graph needs).
+    * Distances agree because min-over-paths ≤ 4 hops = BFS level when
+    * levels ≤ 4. An empty graph has no minimum node, and reports the
+    * null start as the one (null, 0) row it reaches.
     */
   def graphShortestPath(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = thinnedGraph(spark, sfDir)
-    // fresh aliases per derivation: dist and adj share the thinned-
-    // graph lineage, so reusing und's attribute ids trips Spark's
-    // ambiguous-self-join detector
-    val adj = und.select($"u".as("src"), $"v".as("dst"))
-      .union(und.select($"v".as("src"), $"u".as("dst")))
-    val seed = und.select($"u".as("node"))
-      .union(und.select($"v".as("node")))
-      .agg(min($"node").as("node"))
-      .withColumn("dist", lit(0))
-    var dist = seed
-    val sc = spark.sparkContext
-    var prevCkpt: Option[Int] = None
-    for (_ <- 1 to 4) {
-      val next = dist.join(adj, $"node" === $"src")
-        .select($"dst".as("node"), ($"dist" + 1).as("dist"))
-      // truncate lineage each round (round 19, pseudo-diameter's fix):
-      // dist appears twice per round (join input + union), so the
-      // uncut plan doubled per hop — 2^4 copies of the seed subtree,
-      // re-planned and re-codegen'd on every action
-      dist = dist.union(next)
-        .groupBy($"node").agg(min($"dist").as("dist"))
-        .localCheckpoint(true)
-      val newCkpt = ScaleTechniques.checkpointRddId(dist)
-      prevCkpt.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkpt = newCkpt
+    val adj = GraphRounds.adjacency(
+      und.select($"u", $"v").union(und.select($"v", $"u")))
+    val dist = adj.keys.takeOrdered(1).headOption match {
+      case None => Seq((None: Option[Long], 0)).toDF("node", "dist")
+      case Some(start) => GraphRounds.sweep(adj, start, 4).toDF("node", "dist")
     }
     dist.orderBy($"node")
   }

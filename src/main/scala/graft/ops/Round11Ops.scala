@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -92,43 +93,29 @@ object Round11Ops {
     * co-supply graph: each round drops nodes with degree < 2 and the
     * edges touching them. Four rounds is a documented bound, not a
     * fixpoint claim — the oracle unrolls the identical 4 rounds.
-    * Every round is two semi-join-shaped hash joins against a
-    * node list that only shrinks; at scale each round is one shuffle
-    * of the surviving edge list.
     *
-    * Round 19: each round's surviving edge list is localCheckpoint'd
-    * (pagerank's pattern). adj appears twice per round (degree count +
-    * join input), so the uncut lineage DOUBLED per round — the final
-    * plan carried 324 Exchange nodes over ~7000 formatted-plan lines,
-    * cost ~15 s cold to plan+codegen, and its generated-class flood
-    * degraded every op sharing the JVM (the build.sbt code-cache
-    * lesson). Checkpointing makes the plan linear: one groupBy + two
-    * joins per round, 10 Exchanges total end-to-end.
+    * The rounds are co-partitioned RDD message rounds ([[GraphRounds]],
+    * which says why not DataFrames) over a shrinking set of live
+    * nodes: each live node tells itself it is alive and each neighbour
+    * that it is live, and a node stays alive while it has at least 2
+    * live neighbours. A fifth round counts the live neighbours of the
+    * survivors, their degree in the peeled edge list. One shuffle per
+    * round.
     */
   def graphKcorePeel(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val und = Round10Ops4.thinnedGraph(spark, sfDir)
-    var adj = und.select($"u".as("a"), $"v".as("b"))
-      .union(und.select($"v".as("a"), $"u".as("b")))
-      .localCheckpoint(true)
-    val sc = spark.sparkContext
-    var prevCkpt: Option[Int] = ScaleTechniques.checkpointRddId(adj)
-    for (_ <- 1 to 4) {
-      val keep = adj.groupBy($"a").agg(count(lit(1)).as("d"))
-        .filter($"d" >= 2).select($"a".as("kn"))
-      adj = adj
-        .join(keep, adj("a") === $"kn").drop("kn")
-        .join(keep.withColumnRenamed("kn", "kn2"), $"b" === $"kn2").drop("kn2")
-        .localCheckpoint(true)
-      // free the previous round's blocks once this round's are
-      // materialized — only ids THIS loop checkpointed, never a
-      // registry diff that could evict a concurrent query's blocks
-      val newCkpt = ScaleTechniques.checkpointRddId(adj)
-      prevCkpt.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkpt = newCkpt
-    }
-    adj.groupBy($"a".as("node")).agg(count(lit(1)).as("degree"))
+    val adj = GraphRounds.adjacency(
+      und.select($"u", $"v").union(und.select($"v", $"u")))
+    // live node -> its number of live neighbours
+    def liveDegrees(alive: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      GraphRounds.round(adj, alive) { (node, nbrs, _) =>
+        Iterator((node, (true, 0L))) ++ nbrs.iterator.map((_, (false, 1L)))
+      } { case ((a, m), (b, n)) => (a || b, m + n) }
+        .filter(_._2._1).mapValues(_._2)
+    var alive = adj.mapValues(_.length.toLong)
+    for (_ <- 1 to 4) alive = liveDegrees(alive).filter(_._2 >= 2)
+    liveDegrees(alive).filter(_._2 >= 1).toDF("node", "degree")
       .orderBy($"node")
   }
 

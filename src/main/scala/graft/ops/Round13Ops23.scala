@@ -1,9 +1,13 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import scala.collection.mutable.ArrayBuilder
 
 /** Round-13 widening, part 23: weighted PageRank with frozen-decimal
   * message sums, a generated-range source, and day-of-week median
@@ -18,60 +22,52 @@ object Round13Ops23 {
     * (85·Σm) div 100 — every operation is exact integer math, so the
     * two engines agree bit-for-bit with NO rounding discipline needed
     * at all (chained 12-dp double rounding drifted by 1 ulp on 7 of
-    * 21k nodes before this formulation). Each round is one keyed
-    * join + one hash aggregate; lineage cut per round.
+    * 21k nodes before this formulation). The rounds are co-partitioned
+    * RDD message rounds ([[GraphRounds]], which says why not
+    * DataFrames) over each node's neighbour and weight lists, so wsum
+    * is a sum over the node's own list, not a join.
     */
   def graphWeightedPagerank(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val pairs = lineitem(spark, sfDir)
       .groupBy($"l_partkey".as("p"), ($"l_suppkey" + 10000000L).as("s"))
       .agg(count(lit(1)).as("w"))
-    // Round 20: repartition(src) dropped — dead weight pre-checkpoint
-    // (a localCheckpoint's output reports UnknownPartitioning, so no
-    // later join could reuse it): one full weighted-edge exchange gone
-    // and the checkpoint's partition count now follows the data,
-    // shrinking each round's partial-agg fan-out. Integer-exact
-    // protocol: output unchanged by construction.
-    val edges = pairs.select($"p".as("src"), $"s".as("dst"), $"w")
-      .unionAll(pairs.select($"s".as("src"), $"p".as("dst"), $"w"))
-      .localCheckpoint(true)
-    val ws = edges.groupBy($"src").agg(sum($"w").as("wsum"))
-      .localCheckpoint(true)
-    // Round 19: attach wsum to the edge list ONCE, before the loop
-    // — the loop re-ran edges⨝ws every round, shuffling the
-    // full weighted edge list 3× (47 MB/4.7M records). ws is a node-
-    // sized checkpoint with carried stats, so this build join
-    // broadcasts it — no edge exchange.
-    val edgesW = edges.join(ws, "src")
-      .select($"src", $"dst", $"w", $"wsum")
-      .localCheckpoint(true)
-    val sc = spark.sparkContext
-    ScaleTechniques.checkpointRddId(edges).foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-    val n = ws.count()
-    var prevCkpt: Option[Int] = None
-    var ranks = ws.select($"src".as("node"),
-      lit(1000000000000L / n).as("rr"))
-    for (_ <- 1 to 3) {
-      val contrib = edgesW
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select($"dst", expr("(rr * w) div wsum").as("m"))
-        .groupBy($"dst").agg(sum($"m").as("sm"))
-      ranks = contrib.select($"dst".as("node"),
-          (lit(150000000000L / n) + expr("(85 * sm) div 100")).as("rr"))
-        .localCheckpoint(true)
-      val newCkpt = ScaleTechniques.checkpointRddId(ranks)
-      prevCkpt.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkpt = newCkpt
-    }
+    // (neighbours, weights) lists built map-side, as in
+    // GraphRounds.adjacency: every round re-reads this shuffle, and
+    // primitive arrays read back far faster than a tuple per edge
+    val adj = pairs.select($"p", $"s", $"w")
+      .unionAll(pairs.select($"s", $"p", $"w"))
+      .rdd.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+      .combineByKey[(ArrayBuilder.ofLong, ArrayBuilder.ofLong)](
+        { case (d, w) => (new ArrayBuilder.ofLong += d, new ArrayBuilder.ofLong += w) },
+        { case ((ds, ws), (d, w)) => (ds += d, ws += w) },
+        { case ((ds, ws), (ds2, ws2)) => (ds ++= ds2.result(), ws ++= ws2.result()) },
+        new HashPartitioner(spark.sparkContext.defaultParallelism))
+      .mapValues { case (ds, ws) => (ds.result(), ws.result()) }
+    val n = adj.count()
     // scale entirely in integers (floor to micros) — a final
     // round(double, 6) sat exactly on a .5 boundary for 1 of 21k
     // nodes and the engines' double-rounding algorithms split
-    ranks.select($"node",
+    weightedRanks(adj, n).toDF("node", "rr")
+      .select($"node",
         (expr(s"(rr * $n) div 1000000").cast(DoubleType) /
           lit(1000000.0)).as("rank_scaled"))
       .orderBy($"node")
+  }
+
+  /** The three fixed-point rounds over each node's neighbours and
+    * edge weights, on a graph of `n` nodes: ranks ×10¹² as Longs.
+    */
+  private[graft] def weightedRanks(adj: RDD[(Long, (Array[Long], Array[Long]))],
+      n: Long): RDD[(Long, Long)] = {
+    var ranks = adj.mapValues(_ => 1000000000000L / n)
+    for (_ <- 1 to 3) {
+      ranks = GraphRounds.round(adj, ranks) { case (_, (nbrs, ws), rr) =>
+        val wsum = ws.sum
+        nbrs.indices.iterator.map(i => (nbrs(i), rr * ws(i) / wsum))
+      }(_ + _).mapValues(sm => 150000000000L / n + 85 * sm / 100)
+    }
+    ranks
   }
 
   /** Generated-range source: spark.range as the zero-input table

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -18,12 +19,9 @@ object Round13Ops3 {
     * id; each round it adopts the most frequent label among its
     * neighbors, ties to the SMALLEST label — integer-exact and
     * deterministic, so the op oracles against 3 unrolled DuckDB
-    * rounds. Scale shape per round: one key-partitioned join of the
-    * label vector with the edge list, a (node, label) hash count, and
-    * a mergeable max_by argmax per node; `localCheckpoint` cuts
-    * lineage per round (Graph.scala pattern) so plan depth stays flat.
-    * The label vector is a build-once artifact ([[lpaLabelsPath]])
-    * shared with graph_conductance — the query itself is a read.
+    * rounds. The label vector is a build-once artifact
+    * ([[lpaLabelsPath]]) shared with graph_conductance — the query
+    * itself is a read.
     */
   def graphLabelPropagation(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -39,38 +37,38 @@ object Round13Ops3 {
     */
   private[ops] def lpaLabelsPath(spark: SparkSession, sfDir: String): String =
     ScaleTechniques.materializeOnce(
-      s"lpa_labels_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
-      import spark.implicits._
-      val pairs = lineitem(spark, sfDir)
-        .select($"l_partkey".as("p"), ($"l_suppkey" + 10000000L).as("s"))
-        .distinct()
-      val edges = pairs.select($"p".as("src"), $"s".as("dst"))
-        .unionAll(pairs.select($"s".as("src"), $"p".as("dst")))
-        .repartition(col("src"))
-        .localCheckpoint(true)
-      var labels = edges.select($"src".as("node")).distinct()
-        .withColumn("lbl", $"node")
-      val sc = spark.sparkContext
-      var prevCkpt: Option[Int] = None
-      for (_ <- 1 to 3) {
-        val next = edges
-          .join(labels.withColumnRenamed("node", "dst"), "dst")
-          .groupBy($"src".as("node"), $"lbl")
-          .agg(count(lit(1)).as("cnt"))
-          // argmax-per-node as a mergeable aggregate instead of a
-          // node-partitioned top-1 window: max_by over the (cnt, -lbl)
-          // pair implements "most frequent, ties to smallest label"
-          // with partial aggregation and no per-partition sort
-          .groupBy($"node")
-          .agg(max_by($"lbl", struct($"cnt", (-$"lbl").as("neg"))).as("lbl"))
-          .localCheckpoint(true)
-        prevCkpt.foreach(id =>
-          sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-        prevCkpt = ScaleTechniques.checkpointRddId(next)
-        labels = next
-      }
-      labels.select($"node", $"lbl").write.parquet(tmp)
+      s"lpa_labels_v2_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      lpaLabels(spark, sfDir).write.parquet(tmp)
     }
+
+  /** The (node, lbl) vector after 3 rounds of [[propagateLabels]]. */
+  private[graft] def lpaLabels(spark: SparkSession, sfDir: String): DataFrame = {
+    import spark.implicits._
+    val pairs = lineitem(spark, sfDir)
+      .select($"l_partkey".as("p"), ($"l_suppkey" + 10000000L).as("s"))
+      .distinct()
+    propagateLabels(GraphRounds.adjacency(pairs.select($"p", $"s")
+      .unionAll(pairs.select($"s", $"p")))).toDF("node", "lbl")
+  }
+
+  /** Three label propagation rounds, each one co-partitioned message
+    * round ([[GraphRounds]], which says why not DataFrames): every node
+    * sends its label to its neighbours, the messages to a node fold
+    * into its label counts, and the node takes the most frequent
+    * label, ties to the smallest.
+    */
+  private[graft] def propagateLabels(adj: GraphRounds.Adjacency): RDD[(Long, Long)] = {
+    var labels = adj.mapPartitions(_.map { case (node, _) => (node, node) },
+      preservesPartitioning = true)
+    for (_ <- 1 to 3) {
+      labels = GraphRounds.round(adj, labels) { (_, nbrs, lbl) =>
+        nbrs.iterator.map((_, Map(lbl -> 1L)))
+      } { (a, b) =>
+        b.foldLeft(a) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0L) + c) }
+      }.mapValues(_.minBy { case (lbl, c) => (-c, lbl) }._1)
+    }
+    labels
+  }
 
   /** Full xy→d Hilbert index for a 2^order × 2^order grid: the
     * standard iterative conversion as a RUNTIME `aggregate` fold over

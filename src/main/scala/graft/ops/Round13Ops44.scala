@@ -16,11 +16,10 @@ object Round13Ops44 {
     * minimum node, restart from the farthest node found, report the
     * second sweep's eccentricity — the standard 2-pass lower bound
     * that large-graph systems use instead of all-pairs distances.
-    * Both sweeps are 4 hops of co-partitioned RDD message rounds
-    * ([[GraphRounds]], which says why not DataFrames): each hop's
-    * distance is the min over the previous distances and their
-    * neighbours' +1, a narrow join and one shuffle, with lineage held
-    * by shuffle reuse instead of a local checkpoint per hop. All ties
+    * Both sweeps are [[GraphRounds.sweep]]'s 4 hops of co-partitioned
+    * RDD message rounds ([[GraphRounds]], which says why not
+    * DataFrames): a narrow join and one shuffle per hop, with lineage
+    * held by shuffle reuse instead of a local checkpoint per hop. All ties
     * break on node id so the restart vertex is deterministic.
     */
   def graphPseudoDiameter(spark: SparkSession, sfDir: String): DataFrame = {
@@ -28,16 +27,6 @@ object Round13Ops44 {
     val und = Round10Ops4.thinnedGraph(spark, sfDir)
     val adj = GraphRounds.adjacency(
       und.select($"u", $"v").union(und.select($"v", $"u")))
-    def sweep(seed: Long): RDD[(Long, Int)] = {
-      var dist = adj.filter(_._1 == seed).mapValues(_ => 0)
-      for (_ <- 1 to 4) {
-        // min over dist ∪ next: a reached node also keeps its own dist
-        dist = GraphRounds.round(adj, dist) { (node, nbrs, d) =>
-          Iterator((node, d)) ++ nbrs.iterator.map((_, d + 1))
-        }(math.min)
-      }
-      dist
-    }
     def farthest(dist: RDD[(Long, Int)]): (Long, Int) =
       dist.takeOrdered(1)(Ordering.by { case (node, d) => (-d, node) }).head
     val row = adj.keys.takeOrdered(1).headOption match {
@@ -45,8 +34,8 @@ object Round13Ops44 {
       // through both sweeps as the lone (null, 0) row it reaches
       case None => (None, None, 0L, None, 0L, 1L)
       case Some(start) =>
-        val (far, ecc1) = farthest(sweep(start))
-        val d2 = sweep(far)
+        val (far, ecc1) = farthest(GraphRounds.sweep(adj, start, 4))
+        val d2 = GraphRounds.sweep(adj, far, 4)
         val (end, pd) = farthest(d2)
         (Some(start), Some(far), ecc1.toLong, Some(end), pd.toLong, d2.count())
     }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -169,16 +170,13 @@ object Round3Ops {
   }
 
   /** Duplicate CLUSTERS from the verified near-dup pairs: connected
-    * components by iterative min-label propagation (Pregel-lite). Each
-    * round is one shuffle join + partial-aggregated min per node;
-    * `localCheckpoint` cuts the lineage so the plan stays flat across
-    * iterations (on a real cluster, a reliable checkpoint dir serves
-    * the same role). Converges in O(component diameter) rounds —
-    * near-dup clusters are dense, so 2-4 in practice; capped
-    * defensively. This is the step a production dedup pipeline needs
-    * after pair generation: pick one canonical doc per cluster.
-    * min-label is order-free, so the result is deterministic under any
-    * partitioning.
+    * components by iterative min-label propagation (Pregel-lite) with
+    * pointer jumping ([[connectedComponents]]). Converges in
+    * O(log component diameter) rounds — near-dup clusters are dense,
+    * so 2-4 in practice; capped defensively. This is the step a
+    * production dedup pipeline needs after pair generation: pick one
+    * canonical doc per cluster. min-label is order-free, so the result
+    * is deterministic under any partitioning.
     */
   def dedupConnectedComponents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
@@ -196,7 +194,7 @@ object Round3Ops {
     */
   private[ops] def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val path = ScaleTechniques.materializeOnce(
-      s"neardup_cc_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"neardup_cc_v2_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       connectedComponents(spark,
         LlmOps.dedupNearJaccard(spark, sfDir)
           .select(col("id_a"), col("id_b")))
@@ -211,55 +209,50 @@ object Round3Ops {
     * diameter — a 25-round cap then covers any component a dedup
     * pipeline could meet (2^25 hops), where plain propagation would
     * silently truncate long path-shaped components.
+    *
+    * The rounds are co-partitioned RDD message rounds ([[GraphRounds]],
+    * which says why not DataFrames). Propagation is one round, whose
+    * messages also carry each node's previous label, so convergence
+    * detection costs no extra join. Pointer jumping is one keyed
+    * lookup on the adjacency's partitioner: each node asks the
+    * partition that holds its label for that label's label, and the
+    * answers come back to its own partition. Per round: the
+    * propagation shuffle, the two lookup shuffles and one count.
     */
   private[graft] def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
     import spark.implicits._
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val und = edges.select($"id_a".as("id"), $"id_b".as("nb"))
-      .unionAll(edges.select($"id_b".as("id"), $"id_a".as("nb")))
-      .repartition(nPart, col("nb"))
-      .localCheckpoint(true)
-    // und (and anything the caller pinned) stays resident across
-    // rounds; each round's label checkpoint is freed once its
-    // successor is materialized, so storage stays bounded (unbounded
-    // checkpoint retention was the round-7 driver-bench
-    // contamination). Freed by the exact id this loop
-    // checkpointed (checkpointRddId), never a registry snapshot-diff
-    // that could evict a concurrent query's blocks.
-    val sc = spark.sparkContext
+    val adj = GraphRounds.adjacency(edges.select($"id_a", $"id_b")
+      .unionAll(edges.select($"id_b", $"id_a")))
+    val part = adj.partitioner.get
+    // (label, previous label): the previous label rides through the
+    // min-merge, neighbours contributing Long.MinValue
+    def propagate(labels: RDD[(Long, Long)]): RDD[(Long, (Long, Long))] =
+      GraphRounds.round(adj, labels) { (node, nbrs, lbl) =>
+        Iterator((node, (lbl, lbl))) ++ nbrs.iterator.map((_, (lbl, Long.MinValue)))
+      } { case ((a, p), (b, q)) => (math.min(a, b), math.max(p, q)) }
     // initialization IS the first propagation round: label = min(self,
     // neighbors) straight off the edge list — one round fewer in the loop
-    var labels = und.groupBy($"id")
-      .agg(least($"id", min($"nb")).as("lbl"))
-      .localCheckpoint(true)
-    var prevCkpt = ScaleTechniques.checkpointRddId(labels)
+    var labels = propagate(adj.mapPartitions(_.map { case (node, _) => (node, node) },
+      preservesPartitioning = true)).mapValues(_._1)
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < 25) {
-      // the previous label rides through the min-aggregation (neighbors
-      // contribute NULL prev), so convergence detection costs no extra
-      // join — per round: one neighbor join, one label-of-label join,
-      // one partial-aggregated min
-      val nbrLbl = und.join(labels.select($"id".as("nb"), $"lbl".as("cand")), "nb")
-        .select($"id", $"cand", lit(null).cast(LongType).as("prev"))
-      val self = labels.select($"id", $"lbl".as("cand"), $"lbl".as("prev"))
-      val propagated = nbrLbl.unionAll(self)
-        .groupBy($"id").agg(min($"cand").as("lbl"), max($"prev").as("prev"))
-      // pointer jumping: lbl := min(lbl, lbl(lbl))
-      val next = propagated.as("p")
-        .join(propagated.select($"id".as("lbl"), $"lbl".as("lbl2")).as("q"),
-          Seq("lbl"), "left")
-        .select($"id", least($"lbl", coalesce($"lbl2", $"lbl")).as("lbl"), $"prev")
-        .localCheckpoint(true)
-      changed = next.filter($"lbl" < $"prev").count()
-      val newCkpt = ScaleTechniques.checkpointRddId(next)
-      prevCkpt.foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevCkpt = newCkpt
-      labels = next.select($"id", $"lbl")
+      val propagated = propagate(labels)
+      // pointer jumping: lbl := min(lbl, lbl(lbl)), lbl(lbl) read from
+      // this round's propagated labels
+      val asks = propagated.map { case (node, (lbl, prev)) => (lbl, (node, prev)) }
+        .partitionBy(part)
+      val next = asks.zipPartitions(propagated) { (qs, ls) =>
+        val lblOf = ls.map { case (node, (lbl, _)) => (node, lbl) }.toMap
+        qs.map { case (lbl, (node, prev)) =>
+          (node, (math.min(lbl, lblOf.getOrElse(lbl, lbl)), prev))
+        }
+      }.partitionBy(part)
+      changed = next.filter { case (_, (lbl, prev)) => lbl < prev }.count()
+      labels = next.mapValues(_._1)
       iter += 1
     }
-    labels
+    labels.toDF("id", "lbl")
       .withColumn("n_members",
         count(lit(1)).over(Window.partitionBy($"lbl")))
       .select($"id".as("doc_id"), $"lbl".as("cluster_id"), $"n_members")

@@ -73,19 +73,6 @@ object ScaleTechniques {
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
 
-  /** RDD id backing a `localCheckpoint(true)`'d Dataset (its plan is a
-    * LogicalRDD over the materialized blocks). The iterative loops
-    * (pagerank, connected components) use this to free EXACTLY their
-    * own previous round's blocks: the old snapshot-diff of the global
-    * persistent-RDD registry would unpersist ANY RDD persisted after
-    * the snapshot — including a concurrent query's checkpoint blocks,
-    * which are unrecoverable once evicted (lineage is truncated).
-    */
-  def checkpointRddId(df: DataFrame): Option[Int] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-    }
-
   // Per-KEY build locks (round-13 advisory): a process-global lock
   // serialized every artifact read behind whichever long build (CC
   // loop, BPE trainer) held it first in a parallel sweep. Unrelated
