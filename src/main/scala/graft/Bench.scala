@@ -237,7 +237,7 @@ object Bench {
     // must persist across the entire sweep to contaminate an op's
     // min-of-N — so the min column is steal-robust BY CONSTRUCTION and
     // the re-run pass becomes a backstop instead of a 64-op tail.
-    // One-time costs that intentionally amortize (/tmp layouts, model
+    // One-time costs that intentionally amortize (derived layouts, model
     // caches) land in pass 1 and the median reports steady state; the
     // min column stays the canonical comparator (BASELINE.md round-16
     // note). Clamped to >=1; even pass counts report the upper median.
@@ -349,9 +349,9 @@ object Bench {
       // × 640 queries accumulate GBs of storage, and the round-7
       // full-board sweep ran the dedup family 10-20× slower than in
       // isolation (16.4 s vs 0.7 s for dedup_minhash_lsh). Queries
-      // never share cached state across entries (disk layouts
-      // amortize via /tmp), so clearing between runs is
-      // contamination-control, not a benchmark cheat.
+      // never share cached state across entries (derived layouts
+      // amortize in the context's scratch directory), so clearing
+      // between runs is contamination-control, not a benchmark cheat.
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
@@ -531,14 +531,16 @@ object Bench {
 
     // ---- untimed concurrent warmup (round-19, verdict task 1a) ----
     // The driver's budget fits ONE cold pass: BENCH_r18 measured
-    // 1360.6 s cold vs 336.8 s warm — ~1000 s of one-time /tmp fixture
+    // 1360.6 s cold vs 336.8 s warm — ~1000 s of one-time fixture
     // builds, model-cache fills, and first-execution codegen/JIT that
     // the canonical 3-pass sweep amortizes out of its min column. Those
     // costs are real but belong to NO measurement (on a cluster a
     // layout is built once per dataset, a plan compiles once per job),
     // so they are paid here, untimed, BEFORE pass 1 — which then
     // produces warm, canonical-comparable readings even if it is the
-    // only pass the budget fits. Warmup runs ops CONCURRENTLY (8
+    // only pass the budget fits. The layouts live in this context's
+    // scratch directory, so only this run's passes read them. Warmup
+    // runs ops CONCURRENTLY (8
     // threads; measurement cleanliness doesn't matter here, and the
     // fixture builds are small low-parallelism jobs that pack well on
     // local[32] — materializeOnce's per-key locks already serialize

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkFiles
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -89,75 +90,19 @@ object Tables {
   /** NTZ timestamp literal — safe to compare against MILLIS-NTZ columns. */
   def ntz(s: String): Column = expr(s"TIMESTAMP_NTZ '$s'")
 
-  /** Per-session-unique tmp-path suffix: two concurrent runs (e.g. an
-    * sf0.1 bench alongside an sf0.01 verify) must not race on a shared
-    * /tmp directory mid-overwrite. Same construction as Sources.tag.
-    *
-    * Tagged dirs are GC'd two ways (round-13 advisory: per-run tags
-    * fixed the cross-run race but leaked a fresh dir set per
-    * application): a shutdown hook removes THIS application's dirs,
-    * and a once-per-JVM startup sweep removes dirs from crashed runs
-    * older than 6 h — old enough that no legitimately concurrent
-    * session (minutes apart) can still be writing them.
+  /** Path of `name` in this SparkContext's scratch directory, a folder
+    * under SparkFiles' root. Spark creates that root per context under
+    * `spark.local.dir` and deletes it recursively when the context
+    * stops, so every file the ops derive lives exactly as long as the
+    * context that wrote it.
     */
-  def runTag(spark: SparkSession, sfDir: String): String = {
-    registerTmpCleanup(spark.sparkContext.applicationId)
-    touchHeartbeat(spark.sparkContext.applicationId)
-    sfDir.hashCode.toHexString + "_" + spark.sparkContext.applicationId
-  }
+  def scratchPath(name: String): String =
+    new java.io.File(SparkFiles.getRootDirectory(), s"graft/$name").getPath
 
-  private val cleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  // Per-run-tagged dirs carry the Spark appId ("local-<ts>") in their
-  // name; persistent cross-run caches (graft_mat, graft_bucketed,
-  // graft_models) do not, and are deliberately excluded.
-  private def taggedTmpDirs(): Array[java.io.File] =
-    Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("graft_") &&
-        f.getName.contains("_local-"))
-
-  // never recurse THROUGH a directory symlink: /tmp is world-writable,
-  // and a link planted inside a graft dir must not let the sweep reach
-  // outside it (round-13 advisory). The link itself is still removed.
-  private def rmTree(f: java.io.File): Unit = {
-    if (!java.nio.file.Files.isSymbolicLink(f.toPath))
-      Option(f.listFiles()).foreach(_.foreach(rmTree))
-    f.delete(); ()
-  }
-
-  private def registerTmpCleanup(appId: String): Unit =
-    if (cleanupRegistered.compareAndSet(false, true)) {
-      val staleMs = 6L * 3600 * 1000
-      val now = System.currentTimeMillis()
-      // Staleness keys off an explicit heartbeat file, not the dir's
-      // own mtime: a directory mtime is frozen once its entries stop
-      // changing, so a >6h session still READING its per-run dirs
-      // would have been reaped mid-read by a newly started session
-      // (round-13 advisory). Every sweep touches the heartbeat of the
-      // dirs belonging to LIVE use (ours, via runTag on every call);
-      // dirs whose heartbeat (or, for pre-heartbeat dirs, mtime) is
-      // >6h old belong to crashed runs.
-      taggedTmpDirs()
-        .filter { f =>
-          val hb = new java.io.File(f, "_heartbeat")
-          val ts = if (hb.exists()) hb.lastModified() else f.lastModified()
-          now - ts > staleMs
-        }
-        .foreach(rmTree)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        taggedTmpDirs().filter(_.getName.endsWith("_" + appId)).foreach(rmTree)))
-    }
-
-  /** Refresh the heartbeat of THIS application's tagged dirs. Called
-    * from runTag — i.e. on every tagged-path construction — so any
-    * dir the session still uses carries a fresh heartbeat even when
-    * its payload files are only being read (reads don't bump mtime).
+  /** Scratch directory for an op that round-trips data through files:
+    * one per (op, dataset) in a context, so two datasets read by one
+    * context never overwrite each other's files.
     */
-  private def touchHeartbeat(appId: String): Unit =
-    try taggedTmpDirs().filter(_.getName.endsWith("_" + appId)).foreach { f =>
-      val hb = new java.io.File(f, "_heartbeat")
-      hb.createNewFile()
-      hb.setLastModified(System.currentTimeMillis()); ()
-    } catch { case _: Throwable => () }
+  def runDir(op: String, sfDir: String): String =
+    scratchPath(s"${op}_${sfDir.hashCode.toHexString}")
 }

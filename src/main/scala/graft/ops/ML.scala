@@ -125,15 +125,13 @@ object ML {
     * reloaded via `RandomForestClassificationModel.load`, and the test
     * split is scored with the RELOADED model. MLSpec asserts the
     * reloaded predictions are row-identical to the in-memory model's
-    * (mlRfTrainPredict). The save path is one deterministic directory
-    * per dataset, overwritten on every call — no /tmp growth across
-    * sweeps. No oracle (not SQL-expressible).
+    * (mlRfTrainPredict). The save path is the op's run directory
+    * ([[graft.Tables.runDir]]), overwritten on every call. No oracle
+    * (not SQL-expressible).
     */
   def mlRfSaveLoad(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val key = java.lang.Integer.toHexString(
-      new java.io.File(sfDir).getAbsolutePath.hashCode)
-    val path = s"/tmp/graft_models/rf_$key"
+    val path = runDir("rf_model", sfDir)
     classifier(spark, sfDir).write.overwrite().save(path)
     val reloaded = RandomForestClassificationModel.load(path)
     val test = prepared(spark, sfDir).filter($"split" === "test")

@@ -21,16 +21,16 @@ object Round10Ops4 {
     *
     * The edge list is a pure function of the dataset and ~2k rows for
     * top-3 thinning, while its construction is the expensive co-supply
-    * self-join — so it is materialized ONCE per dataset fingerprint
-    * (the repo's shared-derived-layout pattern, same as the bucketed
-    * tables) and every graph op reads the tiny parquet. This is what a
-    * production pipeline does with a derived graph: build it in one
-    * job, let every analysis job scan the artifact.
+    * self-join — so it is materialized once per dataset and context
+    * ([[ScaleTechniques.materializeOnce]]) and every graph op in that
+    * context reads the tiny parquet. This is what a production
+    * pipeline does with a derived graph: build it in one job, let
+    * every analysis job scan the artifact.
     */
   private[ops] def thinnedGraph(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val path = ScaleTechniques.materializeOnce(
-      s"cosupply_knn3_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"cosupply_knn3_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       val ps = lineitem(spark, sfDir)
         .select($"l_partkey".as("p"), $"l_suppkey".as("s")).distinct()
       val w = ps.as("a").join(ps.as("b"),

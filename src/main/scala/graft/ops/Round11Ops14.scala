@@ -199,7 +199,7 @@ object Round11Ops14 {
     */
   def sourcePartitionedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_r11_partrt_" + runTag(spark, sfDir)
+    val out = runDir("r11_partrt", sfDir)
     events(spark, sfDir)
       .select($"event_id", $"event_type", (money($"value") * 100)
         .cast(LongType).as("cents"))

@@ -71,8 +71,8 @@ object Round11Ops17 {
     val base = events(spark, sfDir)
       .select($"event_id", $"event_type",
         (money($"value") * 100).cast(LongType).as("cents"))
-    val csvDir = "/tmp/graft_r11_csv_gz_" + runTag(spark, sfDir)
-    val pqDir = "/tmp/graft_r11_pq_zstd_" + runTag(spark, sfDir)
+    val csvDir = runDir("r11_csv_gz", sfDir)
+    val pqDir = runDir("r11_pq_zstd", sfDir)
     base.write.mode("overwrite").option("compression", "gzip")
       .option("header", "true").csv(csvDir)
     base.write.mode("overwrite").option("compression", "zstd").parquet(pqDir)

@@ -70,7 +70,7 @@ object Round11Ops19 {
     */
   def sourceDynamicPartitionOverwrite(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_dpo_" + runTag(spark, sfDir)
+    val dir = runDir("r11_dpo", sfDir)
     val base = events(spark, sfDir)
       .select($"event_id", (money($"value") * 100).cast(LongType).as("cents"),
         $"event_type")

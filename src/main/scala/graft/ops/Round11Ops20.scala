@@ -143,7 +143,7 @@ object Round11Ops20 {
     */
   def sourcePathGlob(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_glob_" + runTag(spark, sfDir)
+    val dir = runDir("r11_glob", sfDir)
     events(spark, sfDir)
       // round 19: event_id was written but never read back — the
       // glob-read aggregate touches only (event_type, dom, cents), so

@@ -113,7 +113,7 @@ object Round11Ops25 {
     */
   def sourceJsonMultiline(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_mljson_" + runTag(spark, sfDir)
+    val dir = runDir("r11_mljson", sfDir)
     // a CONSTANT-size slice (≤500 docs at any corpus size): a
     // multiline array is ONE document, so the builder necessarily
     // single-threads — the op demonstrates the read path, not bulk
@@ -150,7 +150,7 @@ object Round11Ops25 {
     import spark.implicits._
     orders(spark, sfDir).createOrReplaceTempView("g11_orders_ci")
     spark.sql("DROP TABLE IF EXISTS g11_priority_cents")
-    val ctasDir = "/tmp/graft_r11_ctas_" + runTag(spark, sfDir)
+    val ctasDir = runDir("r11_ctas", sfDir)
     val loc = new org.apache.hadoop.fs.Path(ctasDir)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)

@@ -141,7 +141,7 @@ object Round11Ops30 {
     */
   def sourceIgnoreCorrupt(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_corrupt_" + runTag(spark, sfDir)
+    val dir = runDir("r11_corrupt", sfDir)
     events(spark, sfDir)
       .select($"event_id", $"event_type",
         (money($"value") * 100).cast(LongType).as("cents"))
@@ -164,10 +164,8 @@ object Round11Ops30 {
     */
   def pipelineWriteAuditPublish(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val stage = new org.apache.hadoop.fs.Path(
-      "/tmp/graft_r11_wap_stage_" + runTag(spark, sfDir))
-    val publish = new org.apache.hadoop.fs.Path(
-      "/tmp/graft_r11_wap_pub_" + runTag(spark, sfDir))
+    val stage = new org.apache.hadoop.fs.Path(runDir("r11_wap_stage", sfDir))
+    val publish = new org.apache.hadoop.fs.Path(runDir("r11_wap_pub", sfDir))
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(stage)) fs.delete(stage, true)
     if (fs.exists(publish)) fs.delete(publish, true)

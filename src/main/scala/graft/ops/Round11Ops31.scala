@@ -86,7 +86,7 @@ object Round11Ops31 {
     */
   def sourceJsonCorruptRecords(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_badjson_" + runTag(spark, sfDir)
+    val dir = runDir("r11_badjson", sfDir)
     events(spark, sfDir)
       .select($"event_id", $"event_type",
         (money($"value") * 100).cast(LongType).as("cents"))

@@ -20,7 +20,7 @@ object Round11Ops34 {
     */
   def sourceNestedRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_nested_" + runTag(spark, sfDir)
+    val dir = runDir("r11_nested", sfDir)
     // Round 20 (the source_path_glob lesson, §6 project-before-
     // exchange): aggregate lineitem FIRST and attach the order
     // attribute AFTER the aggregation — the collect_list exchange
@@ -85,7 +85,7 @@ object Round11Ops34 {
     */
   def pipelinePartitionFileStats(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r11_pstats_" + runTag(spark, sfDir)
+    val dir = runDir("r11_pstats", sfDir)
     events(spark, sfDir)
       .select($"event_id", $"event_type",
         (money($"value") * 100).cast(LongType).as("cents"))

@@ -17,14 +17,11 @@ object Round12Ops {
   // ---- sim_ann_index_persist ----
 
   /** IVF index as a PERSISTED parquet artifact (centroids +
-    * nearest-centroid assignments), built exactly once per dataset via
-    * the shared materializeOnce layout (same pattern as the thinned
-    * co-supply graph). At 100 TB the index build is a batch job and
-    * probes are interactive — conflating them (sim_ann_ivf recomputes
-    * assignments inside every query) is the production gap this op
-    * closes. A `_SUCCESS` marker is written at the artifact ROOT after
-    * both subdirectories land, because materializeOnce's publish check
-    * looks there, not inside parquet subdirs.
+    * nearest-centroid assignments), built once per dataset and
+    * context by materializeOnce (same pattern as the thinned co-supply
+    * graph). At 100 TB the index build is a batch job and probes are
+    * interactive — conflating them (sim_ann_ivf recomputes assignments
+    * inside every query) is the production gap this op closes.
     *
     * v3 (round 13): assignments carry the rank column (`rn` 1..3) so
     * ONE artifact serves every IVF consumer — the probe ops filter
@@ -45,7 +42,7 @@ object Round12Ops {
     */
   private[ops] def ivfIndexPath(spark: SparkSession, sfDir: String): String =
     ScaleTechniques.materializeOnce(
-      s"ivf_index_v4_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"ivf_index_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       import spark.implicits._
       val t = LlmOps.embeddingsWithNorm(spark, sfDir)
       val nCent = math.ceil(math.sqrt(t.count().toDouble)).toLong.max(1L)
@@ -66,8 +63,6 @@ object Round12Ops {
         .select($"cid", $"vec_id", $"embedding", $"nrm", $"rn")
       cents.write.parquet(s"$tmp/centroids")
       assigned.write.parquet(s"$tmp/assign")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
     }
 
   /** nProbe for the √n-cell index: ceil(sqrt(nCent)), floored at the
@@ -120,7 +115,7 @@ object Round12Ops {
     */
   private[ops] def bpeMergesPath(spark: SparkSession, sfDir: String): String =
     ScaleTechniques.materializeOnce(
-      s"bpe_merges_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"bpe_merges_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       Round11Ops22.mlBpeTrainMerges(spark, sfDir)
         .coalesce(1).write.parquet(tmp)
     }

@@ -79,7 +79,7 @@ object Round13Ops {
     */
   private[graft] def minhashIndexPath(spark: SparkSession, sfDir: String): String =
     ScaleTechniques.materializeOnce(
-      s"minhash_index_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"minhash_index_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       import spark.implicits._
       val rows = 4; val bands = 3
       graft.expressions.GraftFunctions.ensureRegistered(spark)
@@ -90,8 +90,6 @@ object Round13Ops {
         .select($"doc_id", $"sz", $"pos".as("band"), $"col".as("sig"))
         .write.parquet(s"$tmp/buckets")
       sk.select($"doc_id", $"sz", $"th").write.parquet(s"$tmp/sketch")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(tmp, "_SUCCESS"), Array.emptyByteArray)
     }
 
   /** Incremental MinHash dedup against the persisted index: the

@@ -95,7 +95,7 @@ object Round13Ops10 {
     */
   def scanNestedPruning(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r13_nested_" + runTag(spark, sfDir)
+    val dir = runDir("r13_nested", sfDir)
     orders(spark, sfDir)
       .select($"o_orderkey", struct(
         $"o_orderpriority".as("priority"),

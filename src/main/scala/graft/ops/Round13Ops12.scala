@@ -99,11 +99,11 @@ object Round13Ops12 {
     * export format half the ad-hoc feeds in the wild actually use;
     * Spark reads/writes it natively since 3.x. Content equality is
     * the check (the oracle aggregates the source), the written files
-    * carry the runTag so concurrent sweeps don't collide.
+    * go to the op's run directory ([[graft.Tables.runDir]]).
     */
   def sourceCsvMulticharDelim(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r13_csvmc_" + runTag(spark, sfDir)
+    val dir = runDir("r13_csvmc", sfDir)
     events(spark, sfDir)
       .select($"event_id", $"event_type",
         (money($"value") * 100).cast(LongType).as("cents"))

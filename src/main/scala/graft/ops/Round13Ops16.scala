@@ -42,7 +42,7 @@ object Round13Ops16 {
     */
   def sourceWholetext(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r13_whole_" + runTag(spark, sfDir)
+    val dir = runDir("r13_whole", sfDir)
     val docs = documents(spark, sfDir).filter($"doc_id" < 16)
     // partitionBy gives one directory — and thus one file — per doc,
     // so wholetext reads back exactly one row per document

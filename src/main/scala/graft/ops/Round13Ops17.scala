@@ -63,8 +63,7 @@ object Round13Ops17 {
     */
   def pipelineOffsetResume(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val stateDir = new java.io.File(
-      "/tmp/graft_r13_offsets_" + runTag(spark, sfDir))
+    val stateDir = new java.io.File(runDir("r13_offsets", sfDir))
     stateDir.mkdirs()
     val offsets = new java.io.File(stateDir, "committed.txt")
     def committed(): Set[Int] =
@@ -74,8 +73,8 @@ object Round13Ops17 {
       val w = new java.io.FileWriter(offsets, true)
       try w.write(s"$b\n") finally w.close()
     }
-    // fresh state per invocation: the runTag dir persists across the
-    // sweep but the op owns its lifecycle
+    // fresh state per invocation: the run directory persists across
+    // the sweep but the op owns its lifecycle
     if (offsets.exists()) offsets.delete()
     val chunks = events(spark, sfDir)
       .select(pmod($"event_id", lit(3)).cast(IntegerType).as("batch_id"),

@@ -79,7 +79,7 @@ object Round13Ops19 {
     */
   def sourcePartitionTypeInference(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r13_ptypes_" + runTag(spark, sfDir)
+    val dir = runDir("r13_ptypes", sfDir)
     orders(spark, sfDir)
       .select($"o_orderkey",
         (money($"o_totalprice") * 100).cast(LongType).as("cents"),

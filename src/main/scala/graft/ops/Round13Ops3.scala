@@ -32,12 +32,13 @@ object Round13Ops3 {
   /** The 3-round LPA label vector as a build-once artifact (the
     * nearDupClusters / ivfIndexPath lifecycle): graph_label_propagation
     * AND graph_conductance both consume it, so the iterative build
-    * runs once per dataset instead of once per query — at 100 TB,
-    * community detection is a batch job and its consumers are reads.
+    * runs once per dataset and context instead of once per query — at
+    * 100 TB, community detection is a batch job and its consumers are
+    * reads.
     */
   private[ops] def lpaLabelsPath(spark: SparkSession, sfDir: String): String =
     ScaleTechniques.materializeOnce(
-      s"lpa_labels_v2_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"lpa_labels_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       lpaLabels(spark, sfDir).write.parquet(tmp)
     }
 

@@ -209,7 +209,7 @@ object Round13Ops4 {
     */
   def sourceSchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r13_schevo_" + runTag(spark, sfDir)
+    val dir = runDir("r13_schevo", sfDir)
     val base = orders(spark, sfDir)
       .select($"o_orderkey",
         (money($"o_totalprice") * 100).cast(LongType).as("cents"),

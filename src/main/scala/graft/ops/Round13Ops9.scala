@@ -97,7 +97,7 @@ object Round13Ops9 {
     */
   def sourceParquetBloomRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = "/tmp/graft_r13_pqbloom_" + runTag(spark, sfDir)
+    val dir = runDir("r13_pqbloom", sfDir)
     orders(spark, sfDir)
       .select($"o_orderkey", $"o_custkey",
         (money($"o_totalprice") * 100).cast(LongType).as("cents"))

@@ -194,7 +194,7 @@ object Round3Ops {
     */
   private[ops] def nearDupClusters(spark: SparkSession, sfDir: String): DataFrame = {
     val path = ScaleTechniques.materializeOnce(
-      s"neardup_cc_v2_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"neardup_cc_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       connectedComponents(spark,
         LlmOps.dedupNearJaccard(spark, sfDir)
           .select(col("id_a"), col("id_b")))

@@ -126,7 +126,7 @@ object Round4Ops2 {
     */
   def scanMergeSchema(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_mergeschema_" + runTag(spark, sfDir)
+    val out = runDir("mergeschema", sfDir)
     val o = orders(spark, sfDir)
     o.filter($"o_orderkey" < 100)
       .select($"o_orderkey", $"o_totalprice".cast(DoubleType).as("total"))

@@ -353,18 +353,14 @@ object Round7Ops2 {
     import spark.implicits._
     def nFiles(dir: String): Int =
       new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
-    // publish-once (subdir layout, so the root _SUCCESS marker is
-    // touched by hand): per-invocation temp dirs leaked a 64+4-file
-    // orders copy every bench run
     val out = ScaleTechniques.materializeOnce(
-      s"compact_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"compact_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       orders(spark, sfDir).select($"o_orderkey", $"o_totalprice")
         .repartition(64)
         .write.mode("overwrite").parquet(s"$tmp/small")
       spark.read.parquet(s"$tmp/small")
         .coalesce(4)
         .write.mode("overwrite").parquet(s"$tmp/compacted")
-      new java.io.File(tmp, "_SUCCESS").createNewFile()
     }
     val small = s"$out/small"; val compacted = s"$out/compacted"
     spark.read.parquet(compacted)
@@ -383,7 +379,7 @@ object Round7Ops2 {
   def sourceTextRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val out = ScaleTechniques.materializeOnce(
-      s"text_rt_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"text_rt_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       documents(spark, sfDir).select($"text")
         .write.mode("overwrite").text(tmp)
     }
@@ -467,7 +463,7 @@ object Round7Ops2 {
       df.withColumn("tricky",
         concat(lit("l1\n"), $"lang", lit(",\"q\" end")))
     val tmp = ScaleTechniques.materializeOnce(
-      s"mlcsv_v1_${ScaleTechniques.datasetKey(sfDir)}") { t =>
+      s"mlcsv_${ScaleTechniques.datasetKey(sfDir)}") { t =>
       tricky(documents(spark, sfDir))
         .select($"doc_id", $"tricky")
         .write.mode("overwrite")

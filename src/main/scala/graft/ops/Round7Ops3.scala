@@ -31,7 +31,7 @@ object Round7Ops3 {
     // PartitionPruning rule looks for a selective predicate, so an
     // in-memory dim never triggers DPP. On disk (as any real dim
     // table is) the Filter survives and the pruning subquery appears.
-    val dimPath = ScaleTechniques.materializeOnce("dpp_dim_v1") { tmp =>
+    val dimPath = ScaleTechniques.materializeOnce("dpp_dim") { tmp =>
       Seq(
         ("click", "engagement"), ("view", "engagement"),
         ("purchase", "conversion"), ("signup", "conversion"),

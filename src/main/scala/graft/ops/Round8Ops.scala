@@ -210,7 +210,7 @@ object Round8Ops {
   def scaleSortedSkipping(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val out = ScaleTechniques.materializeOnce(
-      s"events_tssorted_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"events_tssorted_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       events(spark, sfDir)
         .repartitionByRange(8, $"ts")
         .sortWithinPartitions($"ts")
@@ -388,12 +388,10 @@ object Round8Ops {
     */
   def pipelineBackfillPartition(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    // publish-once layout (base write + the dynamic-partition backfill
-    // overwrite happen before the atomic rename): a fresh
-    // createTempDirectory per invocation leaked a full events copy per
-    // bench run — 3 runs/query/sweep grew /tmp without bound
+    // one layout per dataset and context: the base write and the
+    // dynamic-partition backfill overwrite both run inside the build
     val out = ScaleTechniques.materializeOnce(
-      s"backfill_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"backfill_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       val ev = events(spark, sfDir)
         .select($"event_id", $"user_id", $"value", $"event_type")
       ev.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
@@ -509,7 +507,7 @@ object Round8Ops {
   def sourceBinaryfile(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val out = ScaleTechniques.materializeOnce(
-      s"binfile_v1_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
+      s"binfile_${ScaleTechniques.datasetKey(sfDir)}") { tmp =>
       documents(spark, sfDir).select($"text").orderBy($"text")
         .coalesce(1)
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).text(tmp)

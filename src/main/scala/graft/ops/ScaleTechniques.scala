@@ -4,6 +4,8 @@ import graft.Tables._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicBoolean
 
 /** Named 100 TB-scale techniques as first-class, oracle-checked
   * operators: each produces results identical to its naive form while
@@ -12,17 +14,6 @@ import org.apache.spark.sql.types._
   */
 object ScaleTechniques {
 
-  /** Publish-once materialization of a derived /tmp layout. Writers
-    * race two ways: threads in this JVM (Bench/Verify run queries
-    * concurrently in tests) — serialized by the lock — and separate
-    * JVMs (a Bench and a Verify at once) — handled by writing to a
-    * unique temp sibling and ATOMICALLY renaming into place, so a
-    * reader never observes a half-written directory (the old
-    * `_SUCCESS`-existence check passed while part files were still
-    * streaming in). Loser of a cross-JVM race just deletes its temp.
-    * `key` should embed the dataset identity + a layout version, not a
-    * bare hashCode (collision would silently alias two datasets).
-    */
   /** Identity component for cache keys over a source dataset dir: the
     * leaf name (readability) plus a fingerprint of the CANONICAL path
     * and the FULL RECURSIVE (relative path, mtime) listing. Two
@@ -30,7 +21,7 @@ object ScaleTechniques {
     * distinct keys instead of silently aliasing one cached layout, and
     * regenerating ANY file — including one inside a nested
     * subdirectory, which a top-level-only newest-mtime scan missed —
-    * rolls the fingerprint so every derived /tmp layout keyed on it is
+    * rolls the fingerprint so every derived layout keyed on it is
     * rebuilt; adding/removing files rolls it too (the listing hashes
     * paths, not just times). Dots are mapped out so the key is also a
     * valid catalog table-name fragment.
@@ -73,62 +64,31 @@ object ScaleTechniques {
     if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
 
-  // Per-KEY build locks (round-13 advisory): a process-global lock
-  // serialized every artifact read behind whichever long build (CC
-  // loop, BPE trainer) held it first in a parallel sweep. Unrelated
-  // keys now build/read concurrently; two threads wanting the SAME
-  // key still collapse to one build, and the cross-JVM race stays
-  // handled by the rename-publish protocol below.
-  private val matLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  def materializeOnce(key: String)(write: String => Unit): String =
-    matLocks.computeIfAbsent(key, _ => new Object).synchronized {
-      val dest = new java.io.File(s"/tmp/graft_mat/$key")
-      def done = new java.io.File(dest, "_SUCCESS").exists()
-      if (!done) {
-        dest.getParentFile.mkdirs()
-        val tmp = new java.io.File(dest.getPath + ".tmp-" +
-          java.util.UUID.randomUUID().toString.take(8))
-        write(tmp.getPath)
-        if (!tmp.renameTo(dest)) {
-          // another JVM published first (rename onto an existing dir
-          // fails) — keep theirs, drop ours
-          if (!done) throw new IllegalStateException(
-            s"materializeOnce($key): rename failed and no published copy")
-          rmTree(tmp)
-        }
+  // one build flag per artifact path: a new context's scratch root
+  // gives every key a new path, so each context builds its own
+  private val matBuilt = new ConcurrentHashMap[String, AtomicBoolean]()
+
+  /** Builds a derived dataset once per SparkContext and returns its
+    * path in the context's scratch directory ([[graft.Tables.scratchPath]]),
+    * which goes when the context stops. `key` names the artifact and
+    * embeds the dataset identity ([[datasetKey]]); `write` builds it at
+    * the path. Threads wanting the same key share one build under a
+    * per-key lock, while other keys build concurrently. A build that
+    * throws is not recorded: the next call clears what it left behind
+    * and builds again.
+    */
+  def materializeOnce(key: String)(write: String => Unit): String = {
+    val dest = scratchPath(s"mat/$key")
+    val built = matBuilt.computeIfAbsent(dest, _ => new AtomicBoolean)
+    built.synchronized {
+      if (!built.get) {
+        rmTree(new java.io.File(dest))
+        write(dest)
+        built.set(true)
       }
-      // GC: every legitimate fingerprint roll (dataset regenerated)
-      // would otherwise STRAND the previous layout for the same stem —
-      // accumulation without bound across regenerations. An old-key
-      // layout is derived from data that no longer exists, so any
-      // reader still on it is already reading a stale derivation;
-      // deleting it is strictly better than keeping both. The stem
-      // strips the fingerprint suffix AND the artifact's _vN version
-      // segment (round-13 advisory: bumping ivf_index_v1 -> v3
-      // stranded the v1 dirs; the round-13 trailing-only _vN$ strip
-      // never fired for keys shaped name_vN_<datasetKey> because the
-      // version rides mid-key), so a version bump reaps the previous
-      // version's dirs the same way a fingerprint roll does. Only the
-      // FIRST _vN segment is stripped (round-17 advisory): keys are
-      // shaped <artifact>_vN_<datasetKey> with the artifact version
-      // ahead of the dataset identity, and the round-17 strip-anywhere
-      // form also normalized version-looking segments INSIDE the
-      // datasetKey's directory-name portion — a dataset dir named
-      // events_v2_x would share a stem with one named events_x, and
-      // this GC would reap the other dataset's LIVE artifact.
-      def stemOf(n: String): String = n.replaceAll("_[0-9a-f]{12}$", "")
-        .replaceFirst("_v\\d+(_|$)", "$1")
-      val stem = stemOf(key)
-      if (stem != key)
-        Option(dest.getParentFile.listFiles()).foreach(_.foreach { f =>
-          if (f.getName != key && !f.getName.contains(".tmp-") &&
-            f.getName.matches(".*_[0-9a-f]{12}$") &&
-            stemOf(f.getName) == stem)
-            rmTree(f)
-        })
-      dest.getPath
     }
+    dest
+  }
 
   /** Two-phase salted aggregation: phase 1 spreads each hot key over
     * 16 salt shards (bounded per-task state even if one user owns half
@@ -157,55 +117,22 @@ object ScaleTechniques {
     import spark.implicits._
     val tag = datasetKey(sfDir)
     val (to, tl) = (s"graft_orders_b_$tag", s"graft_lineitem_b_$tag")
-    // One-time layout, three states per table: already cataloged (hit);
-    // data on disk but catalog entry lost (fresh JVM with the default
-    // in-memory catalog — RE-ATTACH via external-table DDL, bucket
-    // metadata lives in the catalog and bucket ids in the file names,
-    // so no data moves); neither (write the curated bucketed layout —
-    // the join-relevant projection only, since the one bucketing
-    // shuffle's cost scales with bytes written).
-    def ensure(name: String, ddlCols: String, bucketCol: String)
-        (write: => Unit): Unit = {
-      val path = s"/tmp/graft_bucketed/$name"
-      // GC stale-key siblings: a dataset regeneration rolls the
-      // fingerprint in `name`, and without cleanup every roll strands
-      // the previous bucketed layout AND its catalog entry (same
-      // bounded-/tmp contract as materializeOnce's GC)
-      val stem = name.replaceAll("_[0-9a-f]{12}$", "")
-      if (stem != name) {
-        val stale = java.util.regex.Pattern.quote(stem) + "_[0-9a-f]{12}"
-        spark.catalog.listTables().collect()
-          .map(_.name).filter(n => n != name && n.matches(stale))
-          .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-        Option(new java.io.File("/tmp/graft_bucketed").listFiles())
-          .foreach(_.foreach(f =>
-            if (f.getName != name && f.getName.matches(stale)) rmTree(f)))
-      }
-      if (!spark.catalog.tableExists(name)) {
-        if (new java.io.File(s"$path/_SUCCESS").exists()) {
-          spark.sql(
-            s"""CREATE TABLE $name ($ddlCols) USING PARQUET
-               |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO 8 BUCKETS
-               |LOCATION '$path'""".stripMargin)
-        } else write
-      }
+    // One-time layout of the join-relevant projection only, since the
+    // one bucketing shuffle's cost scales with bytes written. The
+    // in-memory catalog entry and its files under the scratch
+    // directory both live as long as the context.
+    def ensure(name: String, bucketCol: String)(df: => DataFrame): Unit =
+      if (!spark.catalog.tableExists(name))
+        df.write.mode(SaveMode.Overwrite)
+          .option("path", scratchPath(s"bucketed/$name"))
+          .bucketBy(8, bucketCol).sortBy(bucketCol)
+          .saveAsTable(name)
+    ensure(to, "o_orderkey") {
+      orders(spark, sfDir).select(col("o_orderkey"), col("o_orderpriority"))
     }
-    ensure(to, "o_orderkey BIGINT, o_orderpriority STRING", "o_orderkey") {
-      orders(spark, sfDir)
-        .select(col("o_orderkey"), col("o_orderpriority"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"/tmp/graft_bucketed/$to")
-        .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .saveAsTable(to)
-    }
-    ensure(tl, "l_orderkey BIGINT, l_extendedprice DOUBLE, l_discount DOUBLE",
-        "l_orderkey") {
+    ensure(tl, "l_orderkey") {
       lineitem(spark, sfDir)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-        .write.mode(SaveMode.Overwrite)
-        .option("path", s"/tmp/graft_bucketed/$tl")
-        .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .saveAsTable(tl)
     }
     val one = lit(1).cast(D4_2)
     // isolated session: at toy scale AQE would runtime-convert even a
@@ -230,7 +157,7 @@ object ScaleTechniques {
     */
   def partitionedEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = materializeOnce(s"part_events_v1_${datasetKey(sfDir)}") { tmp =>
+    val out = materializeOnce(s"part_events_${datasetKey(sfDir)}") { tmp =>
       events(spark, sfDir)
         .select($"event_id", $"user_id", $"value", $"event_type")
         .write.mode(SaveMode.Overwrite).partitionBy("event_type").parquet(tmp)

@@ -22,16 +22,9 @@ object Sources {
     events(spark, sfDir).select($"event_id", $"event_type", $"user_id", $"value")
   }
 
-  // per-session-unique path component: concurrent sessions on the same
-  // sfDir must not overwrite each other's files mid-read. Delegates to
-  // Tables.runTag so the dirs are registered with the shutdown hook +
-  // stale-dir startup sweep (round-13 advisory: these leaked before).
-  private def tag(spark: SparkSession, sfDir: String): String =
-    runTag(spark, sfDir)
-
   def sourceCsvRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_roundtrip_csv_" + tag(spark, sfDir)
+    val out = runDir("roundtrip_csv", sfDir)
     slice(spark, sfDir).write.mode("overwrite")
       .option("header", "true").csv(out)
     spark.read.option("header", "true").schema(schema).csv(out)
@@ -40,7 +33,7 @@ object Sources {
 
   def sourceJsonRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_roundtrip_json_" + tag(spark, sfDir)
+    val out = runDir("roundtrip_json", sfDir)
     slice(spark, sfDir).write.mode("overwrite").json(out)
     spark.read.schema(schema).json(out)
       .orderBy($"event_id")
@@ -62,7 +55,7 @@ object Sources {
     */
   def sourceCsvMalformed(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_malformed_csv_" + tag(spark, sfDir)
+    val out = runDir("malformed_csv", sfDir)
     slice(spark, sfDir)
       .select(concat_ws(",",
         $"event_id", $"event_type", $"user_id",
@@ -98,7 +91,7 @@ object Sources {
     */
   def sourceOrcRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_roundtrip_orc_" + tag(spark, sfDir)
+    val out = runDir("roundtrip_orc", sfDir)
     slice(spark, sfDir).write.mode("overwrite").orc(out)
     spark.read.schema(schema).orc(out)
       .orderBy($"event_id")
@@ -113,7 +106,7 @@ object Sources {
     */
   def sourceXmlRoundtrip(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = "/tmp/graft_roundtrip_xml_" + tag(spark, sfDir)
+    val out = runDir("roundtrip_xml", sfDir)
     slice(spark, sfDir).write.mode("overwrite")
       .option("rowTag", "event").format("xml").save(out)
     spark.read.schema(schema).option("rowTag", "event").format("xml").load(out)

@@ -2,7 +2,7 @@ package graft
 
 import graft.ops.{Graph, GraphRounds, LlmOps, Round10Ops4, Round11Ops, Round11Ops15,
   Round11Ops24, Round13Ops17, Round13Ops23, Round13Ops3, Round13Ops44, Round3Ops,
-  Round8Ops, ScaleTechniques}
+  Round8Ops}
 import org.apache.spark.HashPartitioner
 import org.apache.spark.ShuffleDependency
 import org.apache.spark.graft.GraftIntrospect
@@ -193,8 +193,6 @@ class GraphRoundsSpec extends AnyFunSuite with SparkFixture {
     Seq("lineitem", "orders").foreach { t =>
       Tables(spark, sf, t).limit(0).write.parquet(s"$dir/$t.parquet")
     }
-    val mat = new java.io.File(
-      s"/tmp/graft_mat/cosupply_knn3_v1_${ScaleTechniques.datasetKey(dir.getPath)}")
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
@@ -204,7 +202,7 @@ class GraphRoundsSpec extends AnyFunSuite with SparkFixture {
       assert(rows("graph_hits_scores").isEmpty)
       // the null start is carried through both sweeps as one (null, 0) row
       assert(rows("graph_pseudo_diameter") === Seq(Row(null, null, 0L, null, 0L, 1L)))
-    } finally { rm(dir); rm(mat) }
+    } finally rm(dir)
   }
 
   test("the five checkpointed loops and their three readers on an empty graph") {
@@ -212,7 +210,6 @@ class GraphRoundsSpec extends AnyFunSuite with SparkFixture {
     Seq("lineitem", "orders", "documents").foreach { t =>
       Tables(spark, sf, t).limit(0).write.parquet(s"$dir/$t.parquet")
     }
-    val key = ScaleTechniques.datasetKey(dir.getPath)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
@@ -225,11 +222,7 @@ class GraphRoundsSpec extends AnyFunSuite with SparkFixture {
       // no nodes, no ranks: the 10¹²/n start rank is never computed
       assert(rows("graph_weighted_pagerank").isEmpty)
       (rows - "graph_shortest_path" - "graph_weighted_pagerank").foreach { case (name, r) => assert(r.isEmpty, name) }
-    } finally {
-      rm(dir)
-      Option(new java.io.File("/tmp/graft_mat").listFiles()).foreach(
-        _.filter(_.getName.contains(key)).foreach(rm))
-    }
+    } finally rm(dir)
   }
 
   // row count and bit_xor(xxhash64(*)) of each op's output at the
@@ -246,8 +239,8 @@ class GraphRoundsSpec extends AnyFunSuite with SparkFixture {
     "graph_conductance" -> "2:b01b862497e2415c",
     "pipeline_dedup_survivorship" -> "9:9ad8b9d7bfbd2255",
     "dedup_cluster_size_histogram" -> "7:11661cacb6baac6d",
-    // the artifact builders, pinned apart from a possibly stale
-    // artifact: the same rows and types as the ops that read them
+    // the artifact builders, pinned apart from the artifact they
+    // fill: the same rows and types as the ops that read them
     "lpa labels" -> "210:cb6d12157a5345b8",
     "connected components" -> "335:3e743d0f8f2fd87e")
 

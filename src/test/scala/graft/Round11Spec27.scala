@@ -61,9 +61,10 @@ class Round11Spec27 extends AnyFunSuite with SparkFixture {
       .as[(String, Long, Long)].collect()
     assert(rows.map(_._2).sum === Tables.orders(spark, sf).count())
     // staging dir is gone after the atomic publish
-    val fs = new org.apache.hadoop.fs.Path("/tmp/graft_r11_wap_stage")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(new org.apache.hadoop.fs.Path("/tmp/graft_r11_wap_stage")))
+    val stage = new org.apache.hadoop.fs.Path(Tables.runDir("r11_wap_stage", sf))
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(stage))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(Tables.runDir("r11_wap_pub", sf))))
   }
 
   test("fuzzy brand match: strong recovery overall") {

@@ -16,8 +16,8 @@ class Round12Spec extends AnyFunSuite with SparkFixture {
     val df = Round12Ops.simAnnIndexPersist(spark, sf)
     df.collect() // finalize AQE so the executed plan is the real one
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ivf_index_v4"),
-      s"probe should scan the persisted index artifact:\n${plan.take(2000)}")
+    assert(df.inputFiles.exists(_.contains(artifact("ivf_index"))),
+      s"probe should scan the persisted index artifact:\n${df.inputFiles.mkString("\n")}")
     assert(!plan.contains("Window"),
       s"assignment window must run only in the index build, not the probe:\n${plan.take(2000)}")
   }
@@ -95,8 +95,8 @@ class Round12Spec extends AnyFunSuite with SparkFixture {
       s"no broadcast hint expected in the semantic-cluster plan:\n${logical.take(2000)}")
     df.collect()
     val physical = df.queryExecution.executedPlan.toString
-    assert(physical.contains("ivf_index_v4"),
-      s"pair generator should scan the persisted index artifact:\n${physical.take(2000)}")
+    assert(df.inputFiles.exists(_.contains(artifact("ivf_index"))),
+      s"pair generator should scan the persisted index artifact:\n${df.inputFiles.mkString("\n")}")
     assert(!physical.contains("Window"),
       s"assignment window must run only in the index build:\n${physical.take(2000)}")
   }

@@ -40,10 +40,7 @@ class Round13Spec19 extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val df = Round13Ops19.sourcePartitionTypeInference(spark, sf)
     // read the written dataset directly to check the INFERRED schema
-    val dir = java.nio.file.Files.list(java.nio.file.Paths.get("/tmp"))
-      .filter(p => p.getFileName.toString.startsWith("graft_r13_ptypes_"))
-      .findFirst().get().toString
-    val raw = spark.read.parquet(dir)
+    val raw = spark.read.parquet(Tables.runDir("r13_ptypes", sf))
     assert(raw.schema("d").dataType ===
       org.apache.spark.sql.types.DateType)
     assert(raw.schema("bucket").dataType ===

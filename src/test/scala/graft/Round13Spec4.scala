@@ -84,8 +84,8 @@ class Round13Spec4 extends AnyFunSuite with SparkFixture {
     assert(recall >= 0.45, s"batch-probe recall@3 $recall below floor")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ivf_index_v4"),
-      s"batch probe should scan the persisted index:\n${plan.take(1500)}")
+    assert(df.inputFiles.exists(_.contains(artifact("ivf_index"))),
+      s"batch probe should scan the persisted index:\n${df.inputFiles.mkString("\n")}")
   }
 
   test("lttb: anchors preserved, one point per populated interior bucket, real series points") {

@@ -9,6 +9,12 @@ import org.scalatest.Suite
 trait SparkFixture { this: Suite =>
   lazy val spark: SparkSession = SparkFixture.session
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Where materializeOnce keeps the artifact `name` built over the
+    * fixture tables.
+    */
+  def artifact(name: String): String =
+    Tables.scratchPath(s"mat/${name}_${graft.ops.ScaleTechniques.datasetKey(sf)}")
 }
 
 object SparkFixture {

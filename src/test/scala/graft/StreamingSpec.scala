@@ -387,7 +387,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("checkpoint recovery: a restarted query resumes from committed offsets, no dupes") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val base = "/tmp/graft_recover_" + spark.sparkContext.applicationId
+    val base = Tables.scratchPath("recover")
     val outDir = s"$base/out"; val ckDir = s"$base/ck"
     val ms = MemoryStream[Ev]
     def startQuery() = ms.toDF()
@@ -421,7 +421,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("foreachBatch upsert sink: update-mode totals land in parquet, re-delivery is a no-op") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val target = "/tmp/graft_fb_upsert_" + spark.sparkContext.applicationId
+    val target = Tables.scratchPath("fb_upsert")
     val ms = MemoryStream[Ev]
     val totals = ms.toDF().groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"), sum($"value").as("sum_value"))
