@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.SparkContext
 import org.apache.spark.ml.attribute.NominalAttribute
 import org.apache.spark.ml.classification.RandomForestClassifier
-import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,10 +20,13 @@ import org.apache.spark.storage.StorageLevel
   * Hadoop-MR mapping: per-mapper tree building is one Spark job whose
   * tasks, one per core, each grow whole trees over a broadcast of the
   * binned training set (`LocalForest`); reduce-side forest assembly is
-  * collecting those trees into an MLlib forest model; the map-only
-  * scoring job is a single predict projection. The "DistributedCache
-  * model shipping" is Spark's broadcast of the forest. A training set
-  * too large for the driver to collect takes MLlib's distributed
+  * collecting those trees into an MLlib forest model, which `saveModel`
+  * writes in MLlib's layout, the serialized forest the scoring job
+  * reads. The map-only scoring job reads that forest's node table into
+  * flat arrays (`FlatForest`), and its "DistributedCache model
+  * shipping" is one broadcast of those arrays; each record's feature
+  * array is predicted by one UDF, with no MLlib vector built. A training
+  * set too large for the driver to collect takes MLlib's distributed
   * histogram-based induction instead (`fitForest`).
   *
   * Like the map-only scoring job, scoring runs the forest once per
@@ -40,8 +44,6 @@ import org.apache.spark.storage.StorageLevel
   *   label int) — e.g. the embeddings table renamed.
   */
 object RandomForestApp {
-
-  private val toVecD = udf((a: Seq[Double]) => Vectors.dense(a.toArray))
 
   /** Deterministic record ids for CSV ingest: rank in the total order
     * over `sortCols` (distributed sort + zipWithIndex's per-partition
@@ -80,18 +82,21 @@ object RandomForestApp {
         lit(": labels must be non-negative integers"))))
   }
 
-  /** Read either format into (id, features vector, label). */
-  def readFeatures(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
+  /** Read either format into (id, features array<double>, label). A CSV
+    * read for a forest of `numFeatures` features must have that many
+    * feature columns.
+    */
+  private def readRows(spark: SparkSession, path: String,
+      numFeatures: Option[Int] = None): DataFrame =
     if (path.endsWith(".csv")) {
       val raw = readCsv(spark, path)
       val featCols = raw.columns.dropRight(1)
-      val labelCol = raw.columns.last
+      numFeatures.foreach(k => require(featCols.length == k,
+        s"$path has ${featCols.length} feature columns but the forest was trained on $k"))
       withStableId(raw, raw.columns.toSeq).select(
         col("id"),
-        toVecD(array(featCols.map(c => col(c).cast(DoubleType)): _*))
-          .as("features"),
-        classLabel(col(labelCol)).as("label"))
+        array(featCols.map(c => col(c).cast(DoubleType)): _*).as("features"),
+        classLabel(col(raw.columns.last)).as("label"))
     } else {
       val raw = spark.read.parquet(path)
       // accept the testdata embeddings schema directly
@@ -99,10 +104,17 @@ object RandomForestApp {
         if (raw.columns.contains("vec_id")) ("vec_id", "embedding", "label")
         else ("id", "features", "label")
       raw.select(col(idCol).cast(LongType).as("id"),
-        toVecD(col(featCol).cast(ArrayType(DoubleType))).as("features"),
+        col(featCol).cast(ArrayType(DoubleType)).as("features"),
         classLabel(col(labelCol)).as("label"))
     }
-  }
+
+  /** `rows` with its feature arrays as the vectors MLlib fits. */
+  private def vectors(rows: DataFrame): DataFrame =
+    rows.withColumn("features", array_to_vector(col("features")))
+
+  /** Read either format into (id, features vector, label). */
+  def readFeatures(spark: SparkSession, path: String): DataFrame =
+    vectors(readRows(spark, path))
 
   /** CSV ingest with categorical (string-typed) feature columns
     * StringIndexer-encoded — the indexers are FIT ON THE TRAINING FILE
@@ -111,9 +123,11 @@ object RandomForestApp {
     * alphabetAsc ordering makes the mapping a function of the category
     * set alone (not of row order/partitioning). Numeric columns pass
     * through unchanged, so pure-numeric CSVs take the exact round-4
-    * path. Returns the training frame and the function that prepares a
-    * test file; the test side is built only when asked for, because
-    * `withStableId` runs its sort's jobs while the frame is built.
+    * path. Returns the training rows, (id, features vector, label), and
+    * the function that prepares a test file as (id, features
+    * array<double>, label); the test side is built only when asked for,
+    * because `withStableId` runs its sort's jobs while the frame is
+    * built. A test file must have the training file's columns.
     */
   private def prepareCsv(spark: SparkSession,
       trainPath: String): (DataFrame, String => DataFrame) = {
@@ -135,10 +149,16 @@ object RandomForestApp {
       // columns are a pure function of them, so sorting on the
       // originals alone is already deterministic
       withStableId(enc, featCols :+ labelCol).select(col("id"),
-        toVecD(array(feats: _*)).as("features"),
+        array(feats: _*).as("features"),
         classLabel(col(labelCol)).as("label"))
     }
-    (prep(trainRaw), path => prep(if (path == trainPath) trainRaw else readCsv(spark, path)))
+    def test(path: String): DataFrame = {
+      val raw = if (path == trainPath) trainRaw else readCsv(spark, path)
+      require(raw.columns.length == trainRaw.columns.length,
+        s"$path has ${raw.columns.length - 1} feature columns but $trainPath has ${featCols.length}")
+      prep(raw)
+    }
+    (vectors(prep(trainRaw)), test)
   }
 
   /** Train-only half of the reference's train-job → serialized-model →
@@ -217,23 +237,26 @@ object RandomForestApp {
       path: String): Unit =
     model.write.overwrite().save(path)
 
-  /** Scoring-job half: LOAD the serialized forest and score a test
-    * file — no training data needed. Model shipping to executors is
-    * Spark's broadcast of the loaded model (the DistributedCache
-    * analogue noted in the class doc). Returns (id, label, prediction)
-    * in one partition, ascending by id. Each row is scored once, on
-    * one task per core: the rows are hash-partitioned by id before the
-    * predict and sorted within the single output partition after it.
-    * An `orderBy(id)` would score every row twice, because its
+  /** Scoring-job half: load the serialized forest and score a test
+    * file — no training data needed. The forest is read in MLlib's saved
+    * layout as flat arrays (`FlatForest.load`: its metadata file and one
+    * scan of its node table), and shipped to the tasks as one broadcast,
+    * the DistributedCache analogue noted in the class doc. A CSV test
+    * file must have the forest's number of feature columns, and a
+    * parquet row the forest's number of features. Returns (id, label,
+    * prediction) in one partition, ascending by id. Each row is scored
+    * once, on one task per core: the rows are hash-partitioned by id
+    * before the predict and sorted within the single output partition
+    * after it. An `orderBy(id)` would score every row twice, because its
     * range-partition sampling job evaluates the whole child plan, and
     * `coalesce(1)` is narrow, so it would pull the predict into one
-    * task.
+    * task. The result keeps the forest it loaded: it scores the same
+    * when re-run after the model directory is overwritten.
     */
   def loadAndScore(spark: SparkSession, modelPath: String,
       testPath: String): DataFrame = {
-    val model = org.apache.spark.ml.classification
-      .RandomForestClassificationModel.load(modelPath)
-    score(model, readFeatures(spark, testPath))
+    val forest = FlatForest.load(spark, modelPath)
+    score(forest, readRows(spark, testPath, Some(forest.numFeatures)))
   }
 
   /** Train + score; returns (id, label, prediction) for the test set. */
@@ -243,20 +266,20 @@ object RandomForestApp {
       if (trainPath.endsWith(".csv")) {
         val (csvTrain, prepTest) = prepareCsv(spark, trainPath)
         (csvTrain, prepTest(testPath))
-      } else (readFeatures(spark, trainPath), readFeatures(spark, testPath))
-    score(fitForest(train0, numTrees, maxDepth, seed), test)
+      } else (readFeatures(spark, trainPath), readRows(spark, testPath))
+    score(FlatForest(fitForest(train0, numTrees, maxDepth, seed)), test)
   }
 
   /** The map-only scoring job shared by `loadAndScore` and
-    * `trainAndScore`; its shape is explained on `loadAndScore`.
+    * `trainAndScore`; its shape is explained on `loadAndScore`. The
+    * broadcast lives as long as the returned frame's plan holds the UDF.
     */
-  private def score(
-      model: org.apache.spark.ml.classification.RandomForestClassificationModel,
-      features: DataFrame): DataFrame = {
-    val cores = features.sparkSession.sparkContext.defaultParallelism
-    model.transform(features.repartition(cores, col("id")))
-      .select(col("id"), col("label"),
-        col("prediction").cast(IntegerType).as("prediction"))
+  private def score(forest: FlatForest, rows: DataFrame): DataFrame = {
+    val sc = rows.sparkSession.sparkContext
+    val shipped = sc.broadcast(forest)
+    val predict = udf((x: Array[Double]) => shipped.value.predict(x))
+    rows.repartition(sc.defaultParallelism, col("id"))
+      .select(col("id"), col("label"), predict(col("features")).as("prediction"))
       .repartition(1).sortWithinPartitions("id")
   }
 

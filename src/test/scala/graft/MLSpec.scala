@@ -2,12 +2,20 @@ package graft
 
 import graft.ops.ML
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** §2i verification: oracle-less ML ops get metric floors + fixed-seed
   * determinism checks (SURVEY §5).
   */
-class MLSpec extends AnyFunSuite with SparkFixture {
+class MLSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
+
+  /** This suite's saved models, in a directory of its own. */
+  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft_ml").toString
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    finally super.afterAll()
 
   // Measured fact (2026-08-12): the synthetic embeddings carry NO label
   // signal — 1-NN cosine scores 0.07 vs the 0.1 random baseline, so no
@@ -76,7 +84,7 @@ class MLSpec extends AnyFunSuite with SparkFixture {
       .setLabelCol("label").setFeaturesCol("features")
       .setNumTrees(10).setMaxDepth(4).setSeed(42L)
       .fit(base.filter(col("split") === "train"))
-    val path = "/tmp/graft_rf_model"
+    val path = s"$tmp/graft_rf_model"
     model.write.overwrite().save(path)
     val loaded = RandomForestClassificationModel.load(path)
     val test = base.filter(col("split") === "test")

@@ -362,4 +362,131 @@ class RandomForestAppSpec extends AnyFunSuite with SparkFixture with BeforeAndAf
       }
     } finally sc.removeSparkListener(listener)
   }
+
+  /** A parquet file of (id, features array<double>, label) rows. */
+  private def writeParquet(name: String, rows: Seq[(Long, Array[Double], Int)]): String = {
+    import spark.implicits._
+    val path = s"$tmp/$name"
+    rows.map { case (i, x, y) => (i, x.toSeq, y) }.toDF("id", "features", "label")
+      .coalesce(1).write.mode("overwrite").parquet(path)
+    path
+  }
+
+  test("scoring: a categorical-split forest predicts as MLlib's, saved and in memory") {
+    import org.apache.spark.ml.attribute.{Attribute, AttributeGroup, NominalAttribute, NumericAttribute}
+    import org.apache.spark.ml.classification.RandomForestClassifier
+    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.ml.tree.{CategoricalSplit, InternalNode, Node}
+    val rng = new scala.util.Random(3)
+    // feature 0 takes 6 categories and sets the label with feature 1
+    def rows(n: Int, cats: Int => Double) = (0 until n).map { i =>
+      val x = Array(cats(i), math.round(rng.nextDouble() * 100) / 100.0, rng.nextDouble())
+      val rule = Set(0.0, 2.0, 5.0)(x(0)) ^ (x(1) > 0.7)
+      (i.toLong, x, if (rule ^ (rng.nextDouble() < 0.1)) 1 else 0)
+    }
+    val train = writeParquet("graft_rfapp_cat_train", rows(2000, _ => rng.nextInt(6).toDouble))
+    // scoring also meets values no category has, which MLlib sends down a
+    // fixed side of each split
+    val test = writeParquet("graft_rfapp_cat_test",
+      rows(1000, i => Seq(0.0, 1.0, 2.0, 3.0, 4.0, 5.0, 7.0, 2.5, -1.0)(i % 9)))
+    val attrs = new AttributeGroup("features", Array[Attribute](
+      NominalAttribute.defaultAttr.withNumValues(6),
+      NumericAttribute.defaultAttr, NumericAttribute.defaultAttr))
+    val model = new RandomForestClassifier().setNumTrees(10).setMaxDepth(4).setSeed(7L)
+      .fit(spark.read.parquet(train).select(col("id"), col("label"),
+        array_to_vector(col("features")).as("features", attrs.toMetadata())))
+    def splits(n: Node): Seq[CategoricalSplit] = n match {
+      case i: InternalNode => (i.split match {
+        case c: CategoricalSplit => Seq(c)
+        case _ => Nil
+      }) ++ splits(i.leftChild) ++ splits(i.rightChild)
+      case _ => Nil
+    }
+    val categorical = model.trees.toSeq.flatMap(t => splits(t.rootNode))
+    // both of MLlib's forms: the left categories, and their complement
+    assert(categorical.exists(c => c.leftCategories.length <= 3), categorical)
+    assert(categorical.exists(c => c.leftCategories.length > 3), categorical)
+    val modelDir = s"$tmp/graft_rfapp_cat_model"
+    RandomForestApp.saveModel(model, modelDir)
+    val expected = RandomForestClassificationModel.load(modelDir)
+      .transform(RandomForestApp.readFeatures(spark, test))
+      .select(col("id"), col("label"), col("prediction").cast(IntegerType).as("prediction"))
+      .orderBy(col("id")).collect().toSeq
+    assert(RandomForestApp.loadAndScore(spark, modelDir, test).collect().toSeq === expected)
+    val flat = FlatForest(model)
+    val features = spark.read.parquet(test).orderBy("id").collect()
+      .map(_.getSeq[Double](1).toArray)
+    assert(features.map(flat.predict).toSeq === expected.map(_.getInt(2)))
+  }
+
+  test("scoring: a scored frame keeps the forest it loaded after the model is overwritten") {
+    import spark.implicits._
+    val csv = numericCsv()
+    val modelDir = s"$tmp/graft_rfapp_kept_model"
+    trainAndSave(csv, modelDir)
+    val out = RandomForestApp.loadAndScore(spark, modelDir, csv)
+    val first = out.collect().toSeq
+    // a forest that predicts class 0 everywhere
+    val zeros = spark.range(50).select(($"id" % 7).cast("double"), ($"id" / 50.0),
+      ($"id" % 5).cast("double"), lit(0))
+    val zerosCsv = s"$tmp/graft_rfapp_zeros.csv"
+    zeros.coalesce(1).write.mode("overwrite").csv(zerosCsv)
+    trainAndSave(zerosCsv, modelDir)
+    assert(RandomForestApp.loadAndScore(spark, modelDir, csv).collect().forall(_.getInt(2) == 0))
+    assert(first.exists(_.getInt(2) != 0))
+    assert(out.collect().toSeq === first)
+  }
+
+  test("scoring: a test file with another feature count than the forest fails") {
+    val modelDir = s"$tmp/graft_rfapp_count_model"
+    trainAndSave(numericCsv(), modelDir)
+    for (k <- Seq(2, 4)) {
+      // CSV: at the read, from the column count
+      val csv = writeCsv(s"graft_rfapp_count_$k", (0 until 20).map(i =>
+        (Seq.fill(k)(f"${i / 20.0}%.2f") :+ (i % 2).toString).mkString(",")))
+      val e = intercept[IllegalArgumentException](RandomForestApp.loadAndScore(spark, modelDir, csv))
+      assert(e.getMessage.contains(s"has $k feature columns") &&
+        e.getMessage.contains("trained on 3"), e.getMessage)
+      val e1 = intercept[IllegalArgumentException](
+        RandomForestApp.trainAndScore(spark, numericCsv(), csv, numTrees = 3))
+      assert(e1.getMessage.contains(s"has $k feature columns") &&
+        e1.getMessage.contains("has 3"), e1.getMessage)
+      // parquet: in the kernel, on the first row
+      val pq = writeParquet(s"graft_rfapp_count_$k",
+        (0 until 20).map(i => (i.toLong, Array.fill(k)(i / 20.0), i % 2)))
+      val e2 = intercept[Exception](RandomForestApp.loadAndScore(spark, modelDir, pq).collect())
+      val cause = Iterator.iterate[Throwable](e2)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case c: IllegalArgumentException => c }
+      assert(cause.exists(c => c.getMessage.contains(s"has $k features") &&
+        c.getMessage.contains("trained on 3")), messages(e2))
+    }
+  }
+
+  test("scoring: building loadAndScore on parquet runs one job past reading the file: the node-table scan") {
+    import org.apache.spark.graft.GraftIntrospect
+    import org.apache.spark.scheduler._
+    val p = s"$sf/embeddings.parquet"
+    val modelDir = s"$tmp/graft_rfapp_jobs_model"
+    trainAndSave(p, modelDir)
+    val sc = spark.sparkContext
+    def jobSites(f: => Unit): Seq[String] = {
+      val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+      }
+      GraftIntrospect.drainListenerBus(sc)
+      sc.addSparkListener(listener)
+      try {
+        f
+        GraftIntrospect.drainListenerBus(sc)
+      } finally sc.removeSparkListener(listener)
+      sites.toArray(Array.empty[String]).toSeq
+    }
+    // the parquet reader's schema inference, the same for any caller
+    val reading = jobSites(RandomForestApp.readFeatures(spark, p))
+    val scoring = jobSites(RandomForestApp.loadAndScore(spark, modelDir, p))
+    assert(scoring.diff(reading).size <= 1, scoring.mkString("\n"))
+    assert(scoring.diff(reading).forall(_.contains("FlatForest")), scoring.mkString("\n"))
+  }
 }

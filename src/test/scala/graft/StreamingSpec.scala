@@ -3,6 +3,7 @@ package graft
 import graft.ops.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.sql.Timestamp
 
@@ -13,7 +14,14 @@ case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
   * micro-batches asserting watermark advancement, late-data drop, and
   * stateful dedup — semantics the batch oracle cannot check.
   */
-class StreamingSpec extends AnyFunSuite with SparkFixture {
+class StreamingSpec extends AnyFunSuite with SparkFixture with BeforeAndAfterAll {
+
+  /** This suite's sinks and checkpoints, in a directory of its own. */
+  private lazy val tmp = java.nio.file.Files.createTempDirectory("graft_streaming").toString
+
+  override def afterAll(): Unit =
+    try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
+    finally super.afterAll()
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
   private def ev(id: Long, t: String, user: Long = 1, typ: String = "click") =
@@ -210,12 +218,8 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
   test("foreachBatch sink: per-batch parquet appends land exactly once") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val outDir = "/tmp/graft_fb_sink"
-    val ckDir = "/tmp/graft_fb_ck"
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(outDir), true)
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(ckDir), true)
+    val outDir = s"$tmp/fb_sink"
+    val ckDir = s"$tmp/fb_ck"
     val ms = MemoryStream[Ev]
     val q = ms.toDF()
       .writeStream
@@ -455,7 +459,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("file-source stream: AvailableNow drains a directory once; new files only on restart") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_filestream").toString
+    val base = s"$tmp/filestream"
     val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
     // file sources discover whole files atomically — the landing-zone
     // ingest pattern (vs MemoryStream's in-JVM rows); AvailableNow
@@ -488,7 +492,7 @@ class StreamingSpec extends AnyFunSuite with SparkFixture {
 
   test("rate-limited ingest: maxFilesPerTrigger + crash replay stays exactly-once") {
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_ingest").toString
+    val base = s"$tmp/ingest"
     val in = s"$base/in"; val out = s"$base/out"; val ck = s"$base/ck"
     // 6 single-file arrivals in the landing zone (one part file per
     // append), 10 rows each — the batch mirror
